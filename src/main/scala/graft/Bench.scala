@@ -1,5 +1,6 @@
 package graft
 
+import graft.core.Json
 import org.apache.spark.sql.SparkSession
 
 /** Perf harness (driver contract): runs the query corpus on
@@ -336,25 +337,19 @@ object Bench {
       } else s
     }
     def qsAt(dec: Int) = results
-      .map { case (k, v) => "\"" + k + "\":" + jnum(v, dec) }
+      .map { case (k, v) => Json.quote(k) + ":" + jnum(v, dec) }
       .mkString("{", ",", "}")
     val total = results.map(_._2).filter(_ >= 0).sum
     // loud failure channel: any unexpected ERROR-level log event during
     // the run lands in the artifact itself (count + first message), not
     // just in a stack trace a parser would skip
     val logErrs = graft.core.LogHygiene.errorCount
-    def escape(m: String): String = m.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    }
     // stdout copy carries a BUDGETED slice of the first error (80 chars
     // pre-escape): the full message lives in BENCH_SELF.json; an
     // unbudgeted log_first (~340 bytes) would overflow the capture
     // window on exactly the runs where the failure channel matters
     def logFirstAt(maxChars: Int) = graft.core.LogHygiene.firstError
-      .map(m => ",\"log_first\":\"" + escape(m.take(maxChars)) + "\"")
+      .map(m => ",\"log_first\":" + Json.quote(m.take(maxChars)))
       .getOrElse("")
     val logFirstFull = logFirstAt(Int.MaxValue)
     // sf as basename only: the dir prefix is constant and the window is
@@ -477,7 +472,7 @@ object Bench {
       }
     }
     def driftJson(a: Adjudication, n: Int, dec: Int) = a.drift.take(n)
-      .map { case (k, w, fl) => "[\"" + k + "\"," + jnum(w, dec) + "," + jnum(fl, dec) + "]" }
+      .map { case (k, w, fl) => "[" + Json.quote(k) + "," + jnum(w, dec) + "," + jnum(fl, dec) + "]" }
       .mkString("[", ",", "]")
     // PER-GATE adjudication rung (r15 verdict #1): the suite verdict is
     // a SUM, so a single-gate regression can hide behind a below-floor
@@ -557,7 +552,7 @@ object Bench {
       }.sortBy { case (_, w, fl) => -(w / math.max(fl, 1e-9)) } // biggest ratio first
     }
     def gatesJson(n: Int, dec: Int) = gateVerdicts.take(n)
-      .map(g => "[\"" + g.name + "\"," + jnum(g.wall, dec) + "," +
+      .map(g => "[" + Json.quote(g.name) + "," + jnum(g.wall, dec) + "," +
         jnum(g.floor, dec) + ",\"" + g.verdict + "\"]")
       .mkString("[", ",", "]")
     // "cpu" (whole process-CPU seconds of the selected runs) rides every
@@ -615,12 +610,12 @@ object Bench {
         // at-floor (the r15 hiding pattern)
         (if (gateVerdicts.nonEmpty) ",\"gates\":" + gatesJson(5, 1) else "") +
         inject.map { case (n, s, m) =>
-          ",\"inject\":\"" + n + ":" + jnum(s, 1) + ":" + m + "\"" }.getOrElse("") +
+          ",\"inject\":" + Json.quote(n + ":" + jnum(s, 1) + ":" + m) }.getOrElse("") +
         // probe-filter provenance (ADVICE r14 #1): a filtered artifact
         // names its filter on every rung, so it can never be mistaken
         // for (or compared as) a full-suite run
         only.map(names => ",\"only\":" + names.toSeq.sorted
-          .map("\"" + _ + "\"").mkString("[", ",", "]")).getOrElse("")
+          .map(Json.quote).mkString("[", ",", "]")).getOrElse("")
     }
     def lineAt(dec: Int, lf: String) =
       f"""{"metric":"total","value":${jnum(total)},"unit":"sec"$cpuField,"log_errors":$logErrs$lf,"queries":${qsAt(dec)},"sf":"$sfName"}"""
@@ -662,7 +657,7 @@ object Bench {
         if (v < 0) "-1" else math.round(v * 10).toString }
       val qn =
         if (withNames)
-          "\"qn\":[" + results.map("\"" + _._1 + "\"").mkString(",") + "],"
+          "\"qn\":[" + results.map(r => Json.quote(r._1)).mkString(",") + "],"
         else ""
       f"""{"metric":"total","value":${jnum(total)},"unit":"sec"$cpuField,"log_errors":$logErrs,"q_omitted":0,$qn"qv_unit":"ds","qv_order":"name-asc","qv":[${vals.mkString(",")}],"sf":"$sfName"}"""
     }
@@ -674,7 +669,7 @@ object Bench {
     // fits; n=0 (just the total) always fits.
     def lineTopAt(n: Int) = {
       val kept = results.sortBy { case (k, v) => (-v, k) }.take(n).sortBy(_._1)
-      val qs = kept.map { case (k, v) => "\"" + k + "\":" + jnum(v, 0) }
+      val qs = kept.map { case (k, v) => Json.quote(k) + ":" + jnum(v, 0) }
         .mkString("{", ",", "}")
       f"""{"metric":"total","value":${jnum(total)},"unit":"sec"$cpuField,"log_errors":$logErrs,"q_omitted":${results.size - n},"queries":$qs,"sf":"$sfName"}"""
     }
@@ -684,20 +679,20 @@ object Bench {
       .find(bytes(_) <= 1950).getOrElse(lineTopAt(0))
     // file copy first (reliable channel regardless of stdout state) —
     // full fidelity: 3-decimal times, runs, the complete sf dir
-    val qsFull = results.map { case (k, v) => "\"" + k + "\":" + jfix(v, 3) }
+    val qsFull = results.map { case (k, v) => Json.quote(k) + ":" + jfix(v, 3) }
       .mkString("{", ",", "}")
     // snapshots in RUN order (that's the axis residue accumulates on):
     // [query, persistent RDD count, their bytes, driver used-heap bytes,
     //  host 1-min load average]
     val snapsJson = snaps.map { case (k, n, b, h, l) =>
-      "[\"" + k + "\"," + n + "," + b + "," + h + "," + jfix(l, 1) + "]" }
+      "[" + Json.quote(k) + "," + n + "," + b + "," + h + "," + jfix(l, 1) + "]" }
       .mkString("[", ",", "]")
     // per-query process-CPU / GC / external-busy seconds of the SELECTED
     // (min-wall) run — the full attribution triplet: wall↑ cpu-at-floor
     // = starved; wall↑ cpu↑ gc↑ = GC storm under memory pressure;
     // wall↑ cpu↑ gc-flat ext-flat = real regression
     def qmap(sel: RunMeas => Double) = resultsCpu
-      .map { case (k, m) => "\"" + k + "\":" + jfix(sel(m), 3) }
+      .map { case (k, m) => Json.quote(k) + ":" + jfix(sel(m), 3) }
       .mkString("{", ",", "}")
     val cpuTotal = resultsCpu.map(_._2.cpu).filter(_ >= 0).sum
     val gcTotal = resultsCpu.map(_._2.gc).filter(_ >= 0).sum
@@ -724,7 +719,7 @@ object Bench {
         (if (a.drift.nonEmpty) ",\"drift_top\":" + driftJson(a, 5, 3) else "")
     }.getOrElse("")
     val onlyFull = only.map(names => ",\"only\":" + names.toSeq.sorted
-      .map("\"" + _ + "\"").mkString("[", ",", "]")).getOrElse("")
+      .map(Json.quote).mkString("[", ",", "]")).getOrElse("")
     val gatesFull =
       if (gateVerdicts.nonEmpty)
         ",\"gate_verdicts\":" + gatesJson(gateVerdicts.size, 3)
@@ -732,29 +727,29 @@ object Bench {
     val driftInfoFull =
       if (driftInfo.nonEmpty)
         ",\"drift_info\":" + driftInfo.map { case (k, w, fl) =>
-          "[\"" + k + "\"," + jfix(w, 3) + "," + jfix(fl, 3) + "]"
+          "[" + Json.quote(k) + "," + jfix(w, 3) + "," + jfix(fl, 3) + "]"
         }.mkString("[", ",", "]")
       else ""
     val injectFull = inject.map { case (n, s, m) =>
-      ",\"inject\":\"" + n + ":" + jnum(s, 1) + ":" + m + "\"" }.getOrElse("")
+      ",\"inject\":" + Json.quote(n + ":" + jnum(s, 1) + ":" + m) }.getOrElse("")
     // config-arm stamps (r18 verdict #4/#5): a non-default master /
     // off-heap / local-dirs run carries its arm in the artifact, so an
     // arm measurement can never be mistaken for (or floor-compared
     // against) a default-config capture
     val armFull =
-      (if (master != masterDefault) ",\"master\":\"" + escape(master) + "\"" else "") +
+      (if (master != masterDefault) ",\"master\":" + Json.quote(master) else "") +
         graft.core.SessionSetup.offHeap
-          .map(v => ",\"offheap\":\"" + escape(v) + "\"").getOrElse("") +
+          .map(v => ",\"offheap\":" + Json.quote(v)).getOrElse("") +
         graft.core.SessionSetup.localDirs
-          .map(v => ",\"local_dirs\":\"" + escape(v) + "\"").getOrElse("")
+          .map(v => ",\"local_dirs\":" + Json.quote(v)).getOrElse("")
     val fsFull =
       if (fsProbe._1 >= 0)
         ",\"fs_probe_mb_s\":" + jfix(fsProbe._1, 1) +
           ",\"tmp_free_gb\":" + jfix(fsProbe._2, 1)
       else ""
-    val qcold = coldWall.map { case (k, v) => "\"" + k + "\":" + jfix(v, 3) }
+    val qcold = coldWall.map { case (k, v) => Json.quote(k) + ":" + jfix(v, 3) }
       .mkString("{", ",", "}")
-    val qmf = resultsCpu.map { case (k, m) => "\"" + k + "\":" + m.mf }
+    val qmf = resultsCpu.map { case (k, m) => Json.quote(k) + ":" + m.mf }
       .mkString("{", ",", "}")
     val jsonFull = s"""{"metric":"total","value":${jfix(total, 3)},"unit":"sec","runs":$runs,"order":"$runOrder","cpu_total":${jfix(cpuTotal, 1)},"gc_total":${jfix(gcTotal, 1)},"ext_total":${jfix(extTotal, 1)}$v3Full,"max_load":${jfix(maxLoadFull, 1)},"contended":$contendedV,"ext_unmeasured":$extUnmeasured$adjFull$gatesFull$driftInfoFull$injectFull$armFull$fsFull$onlyFull,"log_errors":$logErrs$logFirstFull,"queries":$qsFull,"query_cold":$qcold,"query_cpu":${qmap(_.cpu)},"query_gc":${qmap(_.gc)},"query_ext":${qmap(_.ext)},"query_utime":${qmap(_.ut)},"query_stime":${qmap(_.st)},"query_majflt":$qmf,"query_psimem":${qmap(_.pm)},"query_psiio":${qmap(_.pi)},"session_snaps":$snapsJson,"sf":"$sfDir"}"""
     // filtered probes land in a SEPARATE (untracked) file: BENCH_SELF

@@ -1,22 +1,10 @@
 package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.core.Json
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
-
-  /** JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    * — a tab or CR in builder-authored SQL would otherwise make the
-    * driver's json.load fail and silently zero the round's correctness. */
-  private def q(s: String): String = "\"" + s.flatMap {
-    case '"'  => "\\\""
-    case '\\' => "\\\\"
-    case '\n' => "\\n"
-    case '\r' => "\\r"
-    case '\t' => "\\t"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"
-    case c => c.toString
-  } + "\""
 
   /** The dump loop, factored out of main so PARTIAL-FAILURE behavior is
     * unit-testable (VerifySpec): writes oracle_sql.json FIRST — before
@@ -33,7 +21,7 @@ object Verify {
              oracles: Map[String, String]): Seq[String] = {
     new java.io.File(outDir).mkdirs()
     val json = oracles
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+      .map { case (k, v) => s"${Json.quote(k)}: ${Json.quote(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     queries.toSeq.flatMap { case (name, fn) =>
       val t0 = System.nanoTime()
@@ -72,23 +60,7 @@ object Verify {
     require(unknown.isEmpty,
       s"Verify: unknown gate name(s): ${unknown.toSeq.sorted.mkString(", ")} — " +
         s"known gates are SparkEntry.queries' keys")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // SPARK_GRAFT_MASTER (r18 verdict #1): the multi-JVM seam gate —
-    // `local-cluster[n,cores,MB]` runs the full corpus against REAL
-    // separate executor JVMs, where executor-side init, broadcasts and
-    // plan literals can no longer ride on driver-JVM state the way they
-    // silently do under single-JVM local[k]
-    val master = graft.core.SessionSetup.master(s"local[$cpus]")
-    val builder = SparkSession.builder()
-      .master(master)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-    val spark = graft.core.SessionSetup(builder, master).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // same hygiene as Bench: the benign accumulator spam would bury a
-    // real failure in 100+ identical stack traces
-    graft.core.LogHygiene.install()
+    val spark = graft.core.SessionSetup.harness()
     val qs = if (only.isEmpty) SparkEntry.queries
              else SparkEntry.queries.view.filterKeys(only).toMap
     runAll(spark, sfDir, outDir, qs, SparkEntry.oracleSql)

@@ -2,8 +2,8 @@ package graft.core
 
 import org.apache.spark.sql.SparkSession
 
-/** Shared session-config arms for the harness mains (Verify / Bench /
-  * ScaleDecade), so the multi-JVM and deployment knobs behave
+/** Shared session-config arms for the harness mains (Verify / Prof /
+  * Bench / ScaleDecade), so the multi-JVM and deployment knobs behave
   * identically everywhere they are exposed (r18 verdict #1/#4/#5).
   *
   * Knobs (all env-driven, all optional):
@@ -41,6 +41,26 @@ object SessionSetup {
     * default (stamping is by EFFECT, not by env presence). */
   def isConfigArm(masterDefault: String): Boolean =
     master(masterDefault) != masterDefault || offHeap.isDefined || localDirs.isDefined
+
+  /** The session Verify and Prof run on: `local[SPARK_GRAFT_CPUS]`
+    * (default 4) with as many shuffle partitions, UTC, no UI, and the
+    * env arms above. SPARK_GRAFT_MASTER `local-cluster[n,cores,MB]` is
+    * the multi-JVM seam gate (r18 verdict #1): executor-side init,
+    * broadcasts and plan literals can no longer ride on driver-JVM
+    * state the way they silently do under single-JVM local[k]. */
+  def harness(): SparkSession = {
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val m = master(s"local[$cpus]")
+    val spark = apply(SparkSession.builder().master(m)
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false"), m).getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    // the benign accumulator spam would bury a real failure in 100+
+    // identical stack traces
+    LogHygiene.install()
+    spark
+  }
 
   /** Applies every env-driven arm to `builder` for the given master.
     * Returns the builder (fluent). */

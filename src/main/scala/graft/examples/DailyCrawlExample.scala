@@ -17,8 +17,8 @@ import org.apache.spark.sql.functions._
   * Bloom filter, and the LSH index (shingle long form + banded minhash
   * signatures) — and a per-batch STEADY-STATE phase that labels today's
   * crawl against those artifacts alone. The corpus parquet is read only
-  * at compaction; every daily job is batch-sized (the spec and ScaleSoak
-  * assert zero corpus scans in the batch phase with a listener).
+  * at compaction; every daily job is batch-sized (DailyCrawlSpec
+  * asserts zero corpus scans in the batch phase with a listener).
   *
   * Every step is a lazy DataFrame transform; the only driver-side
   * artifacts are the Bloom filter bytes (one array) and the printed

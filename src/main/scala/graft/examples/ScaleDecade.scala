@@ -37,7 +37,7 @@ import org.apache.spark.sql.functions._
   *
   * Measured per (operator, scale): wall seconds of a full noop-write
   * materialization, executor shuffle-read/-write bytes and input bytes
-  * over the window (listener, polled to quiescence), output rows.
+  * over the window ([[graft.tools.Meter]]), output rows.
   * Exponent per operator: log(T_F / T_1) / log(F) — ~1.0 is linear;
   * see SCALING.md "Second scale decade" for the recorded table.
   */
@@ -66,31 +66,11 @@ object ScaleDecade {
     val spark = graft.core.SessionSetup(builder, master).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
-    val sRead = new java.util.concurrent.atomic.AtomicLong()
-    val sWrite = new java.util.concurrent.atomic.AtomicLong()
-    val inB = new java.util.concurrent.atomic.AtomicLong()
     // spill + GC channels: when a scale step departs linear, these say
     // whether the cause is plan shape (more/larger exchanges) or the
     // single-process memory ceiling (spill/GC amplification) — on a
     // cluster the latter is the signal to add executors, not a plan bug
-    val spill = new java.util.concurrent.atomic.AtomicLong()
-    val gcMs = new java.util.concurrent.atomic.AtomicLong()
-    spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-        if (t.taskMetrics != null) {
-          sRead.addAndGet(t.taskMetrics.shuffleReadMetrics.totalBytesRead)
-          sWrite.addAndGet(t.taskMetrics.shuffleWriteMetrics.bytesWritten)
-          inB.addAndGet(t.taskMetrics.inputMetrics.bytesRead)
-          spill.addAndGet(t.taskMetrics.diskBytesSpilled)
-          gcMs.addAndGet(t.taskMetrics.jvmGCTime)
-        }
-    })
-    // listener events drain async: poll each counter until quiescent
-    def now(c: java.util.concurrent.atomic.AtomicLong): Long = {
-      var prev = -1L; var cur = c.get()
-      while (cur != prev) { Thread.sleep(150); prev = cur; cur = c.get() }
-      cur
-    }
+    val meter = new graft.tools.Meter(spark.sparkContext)
 
     val scratch = java.nio.file.Files.createTempDirectory("graft-decade").toString
     try {
@@ -204,26 +184,21 @@ object ScaleDecade {
           .foreachPartition(_ => System.gc())
         System.gc()
         Thread.sleep(1000)
-        val (r0, w0, i0, sp0, g0) =
-          (now(sRead), now(sWrite), now(inB), now(spill), now(gcMs))
-        val t0 = System.nanoTime()
-        val frame = df
-        frame.write.mode("overwrite").format("noop").save()
-        val wall = (System.nanoTime() - t0) / 1e9
-        // counter deltas close HERE, before the rows count: count() is
-        // a SECOND full execution of the plan, and closing the window
+        lazy val frame = df
+        val w = meter.measure(frame.write.mode("overwrite").format("noop").save())
+        // the window closes HERE, before the rows count: count() is a
+        // SECOND full execution of the plan, and closing the window
         // after it attributed ~2x bytes/spill/GC to one wall window
-        // (ADVICE r16 #2). rows is informational and sits outside both
-        // the wall and the byte windows by design.
-        val (r1, w1, i1, sp1, g1) =
-          (now(sRead), now(sWrite), now(inB), now(spill), now(gcMs))
+        // (ADVICE r16 #2). rows is informational and sits outside the
+        // window by design.
         val rows = frame.count()
+        val t = w.total
         // Locale.ROOT, same as Bench's jfix (ADVICE r17 #4): a
         // comma-decimal default locale would emit invalid JSON into the
         // SCALE record lines SCALING.md rows are transcribed from
         def jn(v: Double, dec: Int): String =
           String.format(java.util.Locale.ROOT, s"%.${dec}f", Double.box(v))
-        println(s"""SCALE {"op":"$op","scale":$scale,"wall":${jn(wall, 2)},"rows":$rows,"shuffle_read_mb":${jn((r1 - r0) / 1e6, 1)},"shuffle_write_mb":${jn((w1 - w0) / 1e6, 1)},"input_mb":${jn((i1 - i0) / 1e6, 1)},"spill_mb":${jn((sp1 - sp0) / 1e6, 1)},"gc_s":${jn((g1 - g0) / 1e3, 1)}}""")
+        println(s"""SCALE {"op":"$op","scale":$scale,"wall":${jn(w.wallS, 2)},"rows":$rows,"shuffle_read_mb":${jn(t.shuffleRead / 1e6, 1)},"shuffle_write_mb":${jn(t.shuffleWrite / 1e6, 1)},"input_mb":${jn(t.input / 1e6, 1)},"spill_mb":${jn(t.spill / 1e6, 1)},"gc_s":${jn(t.gcMs / 1e3, 1)}}""")
       }
 
       // componentsStar input: the gate's own edge generator, staged per

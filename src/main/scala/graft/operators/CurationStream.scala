@@ -150,38 +150,62 @@ object CurationStream {
     * (r20, guide §2.6 — overlap independent jobs): at micro-batch
     * granularity the per-epoch wall is dominated by JOB COUNT — each
     * tiny AQE stage pays serial driver/scheduler/commit latency, not
-    * task time (ProfCurStream r19: finalize ran 39 jobs for 2.7
+    * task time (r19 profile: finalize ran 39 jobs for 2.7
     * task-SECONDS) — so running the text/img/aud lanes (and the fold's
     * per-table writes) through a small pool lets one lane's scheduling
     * gaps be back-filled by another's tasks. FIFO scheduling keeps the
     * back-fill behavior; results are unchanged because the thunks
-    * touch disjoint state tables. Failures propagate unwrapped so
-    * foreachBatch's replay contract sees the original exception. */
-  private def inParallel(work: Seq[(String, () => Unit)])
-                        (implicit spark: SparkSession): Unit =
+    * touch disjoint state tables.
+    *
+    * Failure: every lane's jobs carry a fresh per-call job tag (a tag,
+    * not a job group: lanes must keep inheriting the streaming query's
+    * group, which stop() cancels). The first failure cancels the tag's
+    * jobs; every lane is awaited before the original exception is
+    * rethrown unwrapped, so foreachBatch's replay of the epoch never
+    * overlaps a sibling lane still writing the same state partitions. */
+  private[graft] def inParallel(work: Seq[(String, () => Unit)])
+                               (implicit spark: SparkSession): Unit =
     if (work.size <= 1) work.foreach(_._2())
     else {
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(work.size)
+      import java.util.concurrent._
+      val sc = spark.sparkContext
+      val tag = s"graft-cs-${java.util.UUID.randomUUID()}"
+      val failure = new atomic.AtomicReference[Throwable]()
+      // a pool per call, not a shared one: pool threads copy the
+      // caller's local properties (job group, tags, tracing spans) only
+      // when they are created, so a long-lived pool would run later
+      // calls' lanes under the first caller's properties
+      val pool = Executors.newFixedThreadPool(work.size)
+      val futs = work.map { case (label, w) =>
+        pool.submit(new Callable[Unit] {
+          override def call(): Unit = {
+            // per-lane job label (thread-local — exactly why the
+            // guide §1.5 labels matter here: the UI/listeners can
+            // attribute each concurrent lane's jobs)
+            sc.setJobDescription(s"graft-cs:$label")
+            sc.addJobTag(tag)
+            try w()
+            catch { case e: Throwable => failure.compareAndSet(null, e); throw e }
+            finally { sc.removeJobTag(tag); sc.setJobDescription(null) }
+          }
+        })
+      }
       try {
-        val futs = work.map { case (label, w) =>
-          pool.submit(new java.util.concurrent.Callable[Unit] {
-            override def call(): Unit = {
-              // per-lane job label (thread-local — exactly why the
-              // guide §1.5 labels matter here: the UI/listeners can
-              // attribute each concurrent lane's jobs)
-              spark.sparkContext.setJobDescription(s"graft-cs:$label")
-              try w() finally spark.sparkContext.setJobDescription(null)
-            }
-          })
-        }
+        // after a failure keep cancelling: a sibling may submit its next
+        // job after the first cancel went out
         futs.foreach { f =>
-          try f.get()
-          catch {
-            case e: java.util.concurrent.ExecutionException =>
-              throw Option(e.getCause).getOrElse(e)
+          while (!f.isDone) {
+            if (failure.get != null) sc.cancelJobsWithTag(tag)
+            try f.get(100, TimeUnit.MILLISECONDS)
+            catch { case _: TimeoutException | _: ExecutionException => }
           }
         }
-      } finally pool.shutdown()
+        Option(failure.get).foreach(e => throw e)
+      } finally {
+        if (!futs.forall(_.isDone)) sc.cancelJobsWithTag(tag)
+        pool.shutdown()
+        pool.awaitTermination(10, TimeUnit.MINUTES)
+      }
     }
 
   private def writeEpoch(df: DataFrame, dir: String, epochId: Long): Unit =
@@ -553,8 +577,8 @@ object CurationStream {
     // shingle, Dedup.signaturesFrom's corpus shape) was A/B'd here and
     // REJECTED on measurement — with the r19 graft_md5_prefix kernel
     // the per-occurrence digests cost ~1-2 task-s/epoch, while the
-    // extra distinct+join exchanges added ~30 task-s/epoch (ProfCur
-    // warm rounds: 64/88/62 → 94/90/118). Per-occurrence stands.
+    // extra distinct+join exchanges added ~30 task-s/epoch (r20
+    // profile, warm rounds: 64/88/62 → 94/90/118). Per-occurrence stands.
     s.groupBy("id").agg(
       count(lit(1)).as("n"),
       (0 until cfg.minhashPerms).map(i =>
@@ -649,15 +673,6 @@ object CurationStream {
     // from staged blocks instead of racing the first materialization
     writeEpoch(gated, s"$stateDir/gated", epochId)
 
-    // dev-only phase timer (GRAFT_CS_PROF=1; used by ProfCurStream —
-    // zero cost when unset)
-    val csProf = sys.env.contains("GRAFT_CS_PROF")
-    def mark(label: String, t0: Long): Long = {
-      if (csProf) System.err.println(
-        f"[cs-prof] epoch $epochId $label%-18s ${(System.nanoTime() - t0) / 1e9}%6.2f s")
-      System.nanoTime()
-    }
-
     // ---- text lane: exact-dup + near-dup (minhash-LSH) edges ----
     def textLane(): Unit = {
       // exact-dup edges (equal fingerprint)
@@ -685,10 +700,8 @@ object CurationStream {
       // banded rows carry the set size `n` so the accumulated bands
       // table doubles as the sizes artifact (band 0 slice = (id, n)) —
       // one table, one write, no separate sizes lineage
-      var tT = System.nanoTime()
       val banded = Stage.reuse(bandedOf(sig, cfg))
       writeEpoch(banded, s"$stateDir/bands", epochId)
-      tT = mark("text:bands-write", tT)
       // ONE banded join of the batch against batch ∪ accumulated, both
       // sides under the minhashLsh first-matching-band rule (exactly-
       // once per pair, no distinct; both `before` slices have length =
@@ -721,7 +734,7 @@ object CurationStream {
       // STAGED shingle set (join sBatch ⋈ candIds) was tried and
       // REJECTED — the 163k-row shuffle join cost far more than
       // re-deriving the candidate docs' shingles map-side with the
-      // graft kernels (ProfCur warm epochs: edges phase 2.8 → 5.5-6.6 s,
+      // graft kernels (r20 profile, warm epochs: edges phase 2.8 → 5.5-6.6 s,
       // text-lane task-s 534 → 891). Re-derivation from text stands.
       val textAll = accGated
         .fold(gated.select(col("doc_id"), col("text")))(acc =>
@@ -743,7 +756,6 @@ object CurationStream {
         .select("id_a", "id_b")
       writeEpoch(withinExact.unionByName(crossExact).unionByName(lshEdges),
         s"$stateDir/edges", epochId)
-      tT = mark("text:edges-write", tT)
     }
 
     // ---- media lanes (the MultiModalCurationExample settings) ----
@@ -785,7 +797,7 @@ object CurationStream {
     * this when its `foldEvery` knob is > 0, so a production
     * `foreachBatch` driver gets bounded state layout by CONFIGURATION —
     * no manual [[compactState]] calls to remember (the gate, the fuzz
-    * schedules and [[graft.examples.ProfileCurationStream]] all run
+    * schedules and `graft.tools.Prof mm_curation_stream` all run
     * through this path).
     *
     * Crash window: the fold runs inside `foreachBatch`, after the

@@ -314,8 +314,7 @@ object LlmOps {
       .orderBy("doc_id")
 
   /** The synthetic docs have no newlines: rebuild each as pseudo-lines
-    * of 3 tokens (deterministic; the oracles recompute identically —
-    * and ScaleSoak reuses THIS builder so soak and gate cannot drift). */
+    * of 3 tokens (deterministic; the oracles recompute identically). */
   private[graft] def pseudoLined(docs: DataFrame): DataFrame =
     docs
       .select(col("doc_id"), Text.tokens(col("text")).as("toks"))

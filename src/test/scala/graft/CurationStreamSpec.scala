@@ -167,4 +167,28 @@ class CurationStreamSpec extends SparkSpec {
     org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(root))
     org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(refRoot))
   }
+
+  test("inParallel: the first lane failure cancels sibling jobs and is rethrown as is") {
+    val sc = spark.sparkContext
+    val boom = new IllegalStateException("boom")
+    val t0 = System.nanoTime()
+    // the sleeper is listed first: awaiting lanes in order must not
+    // hold the failure back behind it
+    val thrown = intercept[IllegalStateException] {
+      CurationStream.inParallel(Seq(
+        "sleeper" -> (() => {
+          // cancelled tasks are interrupted, so they free the shared
+          // session's slots at once
+          sc.setInterruptOnCancel(true)
+          sc.parallelize(1 to 4, 4).foreach(_ => Thread.sleep(30000))
+        }),
+        "boom" -> (() => throw boom)))(spark)
+    }
+    val secs = (System.nanoTime() - t0) / 1e9
+    assert(thrown eq boom)
+    assert(secs < 15, s"inParallel returned after $secs s")
+    // the job end reaches the status store through the listener bus
+    org.apache.spark.graft.ListenerBus.drain(sc)
+    assert(sc.statusTracker.getActiveJobIds().isEmpty)
+  }
 }

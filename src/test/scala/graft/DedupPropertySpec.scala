@@ -50,4 +50,13 @@ class DedupPropertySpec extends SparkSpec {
       }
     }
   }
+
+  test("ppjoinStats: the verified count is the operator's output and candidates cover it") {
+    val docs = corpus(30, seed = 7L).toDF("doc_id", "text")
+    val stats = Dedup.ppjoinStats(docs, threshold = 0.6).toMap
+    val verified = Dedup.jaccardJoinPrefix(docs, threshold = 0.6).count()
+    assert(verified > 0, "vacuous corpus: no verified pairs")
+    assert(stats("verified_pairs") == verified)
+    assert(stats("candidate_pairs") >= stats("verified_pairs"))
+  }
 }

@@ -56,4 +56,11 @@ class VerifySpec extends SparkSpec {
     graft.core.SessionHygiene.flush(spark)
     assert(spark.sparkContext.getPersistentRDDs.isEmpty)
   }
+
+  test("Json.quote round-trips a quote, a backslash, a tab and a control character") {
+    val s = "a\"b\\c\td\u0001e"
+    val node = new com.fasterxml.jackson.databind.ObjectMapper()
+      .readTree(graft.core.Json.quote(s))
+    assert(node.isTextual && node.asText == s)
+  }
 }
