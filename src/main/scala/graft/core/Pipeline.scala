@@ -191,12 +191,11 @@ final case class Flow(spark: SparkSession, df: DataFrame,
       import org.apache.spark.sql.streaming.Trigger
       val buf = scala.collection.mutable.ArrayBuffer.empty[org.apache.spark.sql.Row]
       val schema = df.schema
-      val q = df.writeStream
+      val q = graft.streaming.Streams.start(df)(_
         .trigger(Trigger.AvailableNow())
         .foreachBatch { (b: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
           val rows = b.collect(); buf.synchronized { buf ++= rows }; ()
-        }
-        .start()
+        })
       // stop as soon as n elements are in hand; otherwise run until the
       // available data is drained (fewer than n rows behaves like a
       // batch limit on a short table)

@@ -1,6 +1,8 @@
 package graft.core
 
-import org.apache.spark.sql.DataFrame
+import graft.streaming.Streams
+import org.apache.spark.sql.{DataFrame, Observation}
+import org.apache.spark.sql.functions.{count, lit}
 import org.apache.spark.sql.types.DataType
 
 import scala.collection.mutable.ArrayBuffer
@@ -24,6 +26,16 @@ object Sink {
   final case class Done(rows: Long) extends Result
   /** Streaming query handle. */
   final case class Streaming(query: org.apache.spark.sql.streaming.StreamingQuery) extends Result
+
+  /** Overwrites `path` with `df` as parquet and returns the rows
+    * written, counted by an observation on the write's own job rather
+    * than by reading the files back (a schema-inference job plus a
+    * count job). */
+  private[core] def writeCounted(df: DataFrame, path: String): Long = {
+    val rows = Observation()
+    df.observe(rows, count(lit(1)).as("rows")).write.mode("overwrite").parquet(path)
+    rows.get("rows").asInstanceOf[Long]
+  }
 }
 
 /** ≙ `std.Out` (`io/std/out.go:29-60`): console printer. */
@@ -44,10 +56,10 @@ final case class ConsoleSink(numRows: Int = 20) extends Sink {
       // aggregated streams need Complete/Update; plain streams need
       // Append — try the plain mode first, fall back for aggregations
       // (≙ the reference's Count().TriggerEvery(..).Apply(std.Out))
-      try flow.df.writeStream.format("console").start()
+      try Streams.start(flow.df)(_.format("console"))
       catch {
         case _: org.apache.spark.sql.AnalysisException =>
-          flow.df.writeStream.format("console").outputMode("complete").start()
+          Streams.start(flow.df)(_.format("console").outputMode("complete"))
       }
     }
 }
@@ -106,7 +118,7 @@ final case class ConsoleBatchedSink(capacity: Int = 100,
           catch { case e: Throwable => self.close(e); throw e }
         }
       Sink.Done(sent.value)
-    } else Sink.Streaming(flow.df.writeStream.foreach(this).start())
+    } else Sink.Streaming(Streams.start(flow.df)(_.foreach(this)))
 }
 
 object ConsoleBatchedSink {
@@ -120,15 +132,10 @@ object ConsoleBatchedSink {
   * bounded/unbounded contract like every other sink here. */
 final case class ParquetSink(path: String, checkpoint: Option[String] = None) extends Sink {
   def write(flow: Flow): Sink.Result =
-    if (flow.bounded) {
-      flow.df.write.mode("overwrite").parquet(path)
-      Sink.Done(flow.spark.read.parquet(path).count())
-    } else Sink.Streaming(
-      flow.df.writeStream.format("parquet")
-        .option("path", path)
-        .option("checkpointLocation",
-          checkpoint.getOrElse(s"$path/_graft_checkpoint"))
-        .start())
+    if (flow.bounded) Sink.Done(Sink.writeCounted(flow.df, path))
+    else Sink.Streaming(Streams.start(flow.df)(_.format("parquet")
+      .option("path", path)
+      .option("checkpointLocation", checkpoint.getOrElse(s"$path/_graft_checkpoint"))))
 }
 
 /** Test sink collecting values driver-side (≙ the examples' stdout
@@ -160,18 +167,14 @@ final case class KafkaLikeSink(path: String, checkpoint: Option[String] = None)
       flow.df.col("value").getField("key").as("key"),
       flow.df.col("value").getField("value").as("value"),
       flow.df.col("value").getField("headers").as("headers"))
-    if (flow.bounded) {
-      kv.write.mode("overwrite").parquet(path)
-      Sink.Done(flow.spark.read.parquet(path).count())
-    } else Sink.Streaming(
+    if (flow.bounded) Sink.Done(Sink.writeCounted(kv, path))
+    else Sink.Streaming(
       // unbounded twin: exactly the column contract of
       // writeStream.format("kafka") — swap the format string and the
       // real producer drops in (offsets/acks ≙ the checkpoint log)
-      kv.writeStream.format("parquet")
+      Streams.start(kv)(_.format("parquet")
         .option("path", path)
-        .option("checkpointLocation",
-          checkpoint.getOrElse(s"$path/_graft_checkpoint"))
-        .start())
+        .option("checkpointLocation", checkpoint.getOrElse(s"$path/_graft_checkpoint"))))
   }
 }
 
@@ -212,5 +215,5 @@ final case class AmqpLikeSink(publish: Array[Byte] => Unit, ordered: Boolean = f
           }
         Sink.Done(sent.value)
       }
-    } else Sink.Streaming(flow.df.writeStream.foreach(this).start())
+    } else Sink.Streaming(Streams.start(flow.df)(_.foreach(this)))
 }

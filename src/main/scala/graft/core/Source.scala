@@ -63,7 +63,8 @@ final case class ListSource[T](values: Seq[T], toValue: T => Any = identity[T] _
     val schema = StructType(Seq(
       StructField("value", valueType), StructField("uniq", LongType)))
     Source.stamp(spark.createDataFrame(
-      spark.sparkContext.parallelize(rows, math.min(values.size max 1, 32)), schema))
+      spark.sparkContext.parallelize(rows,
+        math.min(values.size max 1, spark.sparkContext.defaultParallelism)), schema))
   }
 }
 

@@ -393,7 +393,7 @@ object DailyCrawlExample {
     // immutable between compactions
     val index = loadIndex(stream.sparkSession, indexDir)
     val lineIndex = loadLineIndex(stream.sparkSession, indexDir)
-    stream.writeStream
+    graft.streaming.Streams.start(stream)(_
       .foreachBatch { (batch: DataFrame, epochId: Long) =>
         labelBatchLoaded(batch, benchmark, index, targets, lineIndex)
           .withColumn("__epoch", lit(epochId))
@@ -402,8 +402,7 @@ object DailyCrawlExample {
           .partitionBy("__epoch")
           .parquet(outDir)
       }
-      .option("checkpointLocation", checkpoint)
-      .start()
+      .option("checkpointLocation", checkpoint))
   }
 
   def main(args: Array[String]): Unit = {

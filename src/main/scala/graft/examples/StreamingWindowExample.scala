@@ -26,10 +26,9 @@ object StreamingWindowExample {
     val stream = spark.readStream.format("graft.sources.RecordsDataSource")
       .option("rows", "600").option("rowsperbatch", "200").load()
     val windowed = Streams.tumblingCounts(stream, "ts", "1 minute", "30 seconds")
-    val q = windowed.writeStream
+    val q = Streams.start(windowed)(_
       .outputMode(OutputMode.Append())
-      .format("console").option("truncate", "false")
-      .start()
+      .format("console").option("truncate", "false"))
     // records span 600s of event time; drain the bounded range then stop
     val deadline = System.currentTimeMillis() + 60000
     def drained: Boolean = Option(q.lastProgress).exists(

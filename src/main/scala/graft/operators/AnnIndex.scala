@@ -359,13 +359,12 @@ object AnnIndex {
                 idCol: String = "vec_id", vecCol: String = "embedding")
       : org.apache.spark.sql.streaming.StreamingQuery = {
     val model = load(stream.sparkSession, indexDir)
-    stream.writeStream
+    graft.streaming.Streams.start(stream)(_
       .foreachBatch { (batch: DataFrame, epochId: Long) =>
         addEpoch(batch, indexDir, model, epochId, idCol, vecCol,
           streamIdFor(checkpoint))
       }
-      .option("checkpointLocation", checkpoint)
-      .start()
+      .option("checkpointLocation", checkpoint))
   }
 
   /** The stream identity [[addStream]] scopes its epochs under — a
@@ -387,12 +386,11 @@ object AnnIndex {
   def removeStream(stream: DataFrame, indexDir: String, checkpoint: String,
                    idCol: String = "vec_id")
       : org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
+    graft.streaming.Streams.start(stream)(_
       .foreachBatch { (batch: DataFrame, _: Long) =>
         remove(batch, indexDir, idCol)
       }
-      .option("checkpointLocation", checkpoint)
-      .start()
+      .option("checkpointLocation", checkpoint))
 
   /** FAISS's `remove_ids` as tombstones: a curation pipeline that
     * drops documents (dedup, decontamination) must evict their vectors

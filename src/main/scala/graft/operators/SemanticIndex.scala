@@ -130,7 +130,7 @@ object SemanticIndex {
                   idCol: String = "vec_id", vecCol: String = "embedding")
       : org.apache.spark.sql.streaming.StreamingQuery = {
     val model = load(stream.sparkSession, indexDir)
-    stream.writeStream
+    graft.streaming.Streams.start(stream)(_
       .foreachBatch { (batch: DataFrame, epochId: Long) =>
         labelBatch(batch, model, threshold, idCol, vecCol)
           .withColumn("__epoch", lit(epochId))
@@ -139,7 +139,6 @@ object SemanticIndex {
           .partitionBy("__epoch")
           .parquet(outDir)
       }
-      .option("checkpointLocation", checkpoint)
-      .start()
+      .option("checkpointLocation", checkpoint))
   }
 }

@@ -1306,7 +1306,7 @@ object LlmOps {
       // STILL hash-equal the batch gate under the same DuckDB oracle
       // (fold invisibility, adjudicated per round, through the same
       // auto-fold path a production foreachBatch driver configures)
-      val q = mem.toDF().toDF("doc_id", "text").writeStream
+      val q = graft.streaming.Streams.start(mem.toDF().toDF("doc_id", "text"))(_
         .foreachBatch { (b: DataFrame, epochId: Long) =>
           val ids = b.select(col("doc_id")).filter(col("doc_id") < 2000)
           CurationStream.ingestEpoch(b,
@@ -1314,8 +1314,7 @@ object LlmOps {
             MultiModalCurationExample.epochHashClips(ids),
             stateDir, epochId, foldEvery = 2)
         }
-        .option("checkpointLocation", s"$root/ckpt")
-        .start()
+        .option("checkpointLocation", s"$root/ckpt"))
       try {
         byEpoch.foreach { part =>
           mem.addData(part.toSeq: _*)

@@ -17,7 +17,8 @@ object PipelineQueries {
     * mapped through a pipeline stage. The reference's From is the
     * canonical example root (`io/list.go:27-29`); the gate pins the
     * uniq-indexed order contract (element i keeps uniq=i through maps).
-    * Scale: the list parallelizes across ≤32 splits at read. */
+    * Scale: the list parallelizes across at most one split per core
+    * (`defaultParallelism`) at read. */
   def pFromList(spark: SparkSession, dir: String): DataFrame =
     Pipeline(spark)
       .root(ListSource((0 until 500).map(_.toString)))

@@ -26,6 +26,7 @@ import org.apache.spark.sql.SparkSession
   *    (long join lookbacks, wide dedup horizons). Both run the SAME
   *    plans unchanged; StreamingSpec pins result equality across the
   *    two.
+  *  - checkpoint files: [[LocalCheckpointFileManager]], set by [[Streams.start]], not a knob.
   *
   * [[withState]] brackets a build-and-run block with these settings
   * and restores the session afterwards — the session-global conf is

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
 
 import scala.collection.mutable.ArrayBuffer
 
@@ -294,11 +294,10 @@ object Streams {
     * stops — the streaming twin of a bounded run. */
   def runAvailableNow(df: DataFrame, outputMode: OutputMode = OutputMode.Append())
                      (onBatch: DataFrame => Unit): Unit = {
-    val q = df.writeStream
+    val q = start(df)(_
       .outputMode(outputMode)
       .trigger(Trigger.AvailableNow())
-      .foreachBatch((batch: Dataset[org.apache.spark.sql.Row], _: Long) => { onBatch(batch.toDF()); () })
-      .start()
+      .foreachBatch((batch: Dataset[org.apache.spark.sql.Row], _: Long) => { onBatch(batch.toDF()); () }))
     q.awaitTermination()
   }
 
@@ -420,9 +419,24 @@ object Streams {
     * write (ref `def.go:84-87`). */
   def triggerEvery(df: DataFrame, interval: String, outputMode: OutputMode)
                   (onBatch: DataFrame => Unit): StreamingQuery =
-    df.writeStream
+    start(df)(_
       .outputMode(outputMode)
       .trigger(Trigger.ProcessingTime(interval))
-      .foreachBatch((batch: Dataset[org.apache.spark.sql.Row], _: Long) => { onBatch(batch.toDF()); () })
-      .start()
+      .foreachBatch((batch: Dataset[org.apache.spark.sql.Row], _: Long) => { onBatch(batch.toDF()); () }))
+
+  private val CheckpointManagerKey = "spark.sql.streaming.checkpointFileManagerClass"
+
+  /** Every streaming `start()` of the program goes through here: the
+    * writer `configure` builds on `ds.writeStream` starts under a
+    * session whose checkpoint files are managed by
+    * [[LocalCheckpointFileManager]] unless the session (or its Hadoop
+    * conf) already names a manager. The stream clones the session at
+    * `start()`, so the setting must be in place before it. */
+  def start[T](ds: Dataset[T])(configure: DataStreamWriter[T] => DataStreamWriter[T]): StreamingQuery = {
+    val spark = ds.sparkSession
+    if (spark.conf.getOption(CheckpointManagerKey).isEmpty &&
+        spark.sparkContext.hadoopConfiguration.get(CheckpointManagerKey) == null)
+      spark.conf.set(CheckpointManagerKey, classOf[LocalCheckpointFileManager].getName)
+    configure(ds.writeStream).start()
+  }
 }
