@@ -1,5 +1,7 @@
 package graft.core
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.SparkSession
 
 /** Deterministic between-queries session cleanup for the harness mains
@@ -20,6 +22,10 @@ import org.apache.spark.sql.SparkSession
   *
   * On a real cluster the same call is the end-of-job hygiene for a
   * long-lived driver submitting many independent pipelines.
+  *
+  * A flush that fails is not the query's failure, so non-fatal errors
+  * are dropped; an interrupt, a VM error or a control throwable
+  * propagates (the flush runs in the `finally` of every harness gate).
   */
 object SessionHygiene {
   def flush(spark: SparkSession): Unit = {
@@ -31,6 +37,6 @@ object SessionHygiene {
       spark.sparkContext.getPersistentRDDs.values
         .foreach(_.unpersist(blocking = true))
       spark.catalog.clearCache()
-    } catch { case _: Throwable => () }
+    } catch { case NonFatal(_) => () }
   }
 }

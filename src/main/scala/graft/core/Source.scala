@@ -95,7 +95,7 @@ final case class RoundRobinSource(n: Long, values: Seq[String]) extends Source {
 final case class TableSource(path: String, valueCol: String, uniqCol: String)
   extends Source {
   def read(spark: SparkSession): DataFrame =
-    Source.stamp(spark.read.parquet(path)
+    Source.stamp(Tables.read(spark, path)
       .select(col(valueCol).as("value"), col(uniqCol).as("uniq")))
 }
 

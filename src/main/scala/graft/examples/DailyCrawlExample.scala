@@ -413,7 +413,7 @@ object DailyCrawlExample {
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
-    val docs = spark.read.parquet(s"$sfDir/documents.parquet")
+    val docs = graft.core.Tables(spark, sfDir).documents
     val bucket = Sampling.hashBucket(col("doc_id"))
     // in production each is its own table; the hash split here just
     // carves the one test corpus into the three roles

@@ -81,7 +81,7 @@ object PipelineQueries {
     * eager materialization boundary like [[pTextFile]]. */
   def pBinaryFile(spark: SparkSession, dir: String): DataFrame = {
     val stage = java.nio.file.Files.createTempDirectory("graft-binsrc").toString
-    val docs = spark.read.parquet(s"$dir/documents.parquet")
+    val docs = Tables(spark, dir).documents
       .filter(col("doc_id") < 50)
       .select(col("doc_id"), col("text")).collect() // 50 bounded rows: staging only
     docs.foreach { r =>
@@ -112,7 +112,7 @@ object PipelineQueries {
     * splits; the checkpoint is gate-hygiene, not part of the operator. */
   def pTextFile(spark: SparkSession, dir: String): DataFrame = {
     val stage = java.nio.file.Files.createTempDirectory("graft-textsrc").toString
-    spark.read.parquet(s"$dir/documents.parquet")
+    Tables(spark, dir).documents
       .filter(col("doc_id") < 200)
       .select(col("text"))   // no embedded newlines in the fixture: 1 doc = 1 line
       .write.mode("overwrite").text(s"$stage/txt")

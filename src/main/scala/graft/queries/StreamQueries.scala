@@ -25,10 +25,10 @@ object StreamQueries {
     * checkpoint makes the run resumable — the same plan, pointed at a
     * Kafka topic instead of a directory, is the production pipeline. */
   def q27StreamE2e(spark: SparkSession, dir: String): DataFrame = {
-    val path = s"$dir/documents.parquet"
-    // file stream sources need an explicit schema: take it from a batch
-    // read of the same path (footer-only, no data scan)
-    val schema = spark.read.parquet(path).schema
+    // file stream sources need an explicit schema: take the batch
+    // table's (no data scan; Tables.read runs a footer-inference job only
+    // on the driver's first read of the file)
+    val schema = graft.core.Tables(spark, dir).documents.schema
     // the stream's basePath must be a DIRECTORY: stream the table dir
     // with a glob filter selecting just this table's file(s).
     // 8 state partitions (r19): same StreamConfig bracket as the replay

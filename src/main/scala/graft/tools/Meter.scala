@@ -7,25 +7,42 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.SparkContext
 import org.apache.spark.graft.ListenerBus
 import org.apache.spark.scheduler._
+import org.apache.spark.sql.execution.ui.{SparkListenerSQLExecutionEnd, SparkListenerSQLExecutionStart}
 
 /** One SparkListener that records jobs and sums task metrics over a
   * window. [[measure]] drains the listener bus, opens the window, runs
   * the body, reads the wall time, then drains again before it reads the
   * sums — so the wall excludes the drain and no trailing event is lost.
-  * Windows must not overlap; [[close]] detaches the listener. */
+  * Windows must not overlap; [[close]] detaches the listener.
+  *
+  * A job that Spark submits on a query's behalf from its own threads (an
+  * AQE query stage, a broadcast) carries a call site inside those
+  * threads, in `CompletableFuture.java`. Such a job, one whose call site
+  * is not its SQL execution's, is recorded with the execution's call
+  * site instead, marked ` (stage)`. */
 final class Meter(sc: SparkContext) extends SparkListener {
   import Meter._
 
   private val jobs = new ConcurrentHashMap[Int, Job]()
   private val stageJob = new ConcurrentHashMap[Int, Int]()
   private val sums = new ConcurrentHashMap[Int, Sums]()
+  private val execSite = new ConcurrentHashMap[Long, String]()
   sc.addSparkListener(this)
+
+  override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+    case s: SparkListenerSQLExecutionStart =>
+      execSite.put(s.executionId, shortSite(s.details).getOrElse(s.description))
+    case s: SparkListenerSQLExecutionEnd => execSite.remove(s.executionId)
+    case _ =>
+  }
 
   override def onJobStart(e: SparkListenerJobStart): Unit = {
     // the result stage (the job's newest) is named after its call site
-    val site = e.stageInfos.maxByOption(_.stageId).fold("")(_.name)
-    val desc = Option(e.properties)
-      .flatMap(p => Option(p.getProperty("spark.job.description"))).getOrElse("")
+    val own = e.stageInfos.maxByOption(_.stageId).fold("")(_.name)
+    val prop = (k: String) => Option(e.properties).flatMap(p => Option(p.getProperty(k)))
+    val site = prop("spark.sql.execution.id").flatMap(id => Option(execSite.get(id.toLong)))
+      .filter(_ != own).fold(own)(q => s"$q (stage)")
+    val desc = prop("spark.job.description").getOrElse("")
     jobs.put(e.jobId,
       Job(e.jobId, e.time, -1L, site, desc.replaceAll("\\s+", " ").trim, Sums()))
     // a shared or skipped stage belongs to the first job that listed it
@@ -52,6 +69,18 @@ final class Meter(sc: SparkContext) extends SparkListener {
 }
 
 object Meter {
+  private val Method = """.*\.([^.(]+)\(.*""".r
+  private val Location = """.*\(([^()]+)\)""".r
+
+  /** Spark's short call site (`collect at Foo.scala:12`) from its long
+    * form, whose first line is the last Spark frame and second the
+    * first user frame. */
+  private def shortSite(longForm: String): Option[String] =
+    longForm.split('\n') match {
+      case Array(Method(m), Location(at), _*) => Some(s"$m at $at")
+      case _ => None
+    }
+
   /** Task totals: count, run/CPU/GC time, and bytes. */
   final case class Sums(tasks: Long = 0, runMs: Long = 0, cpuNs: Long = 0,
                         gcMs: Long = 0, shuffleRead: Long = 0,

@@ -11,7 +11,8 @@ import org.apache.spark.sql.SparkSession
   *
   * Prints one line per run; for a gate's last run the job trace (gap =
   * driver time since the previous job ended, negative when jobs
-  * overlap) and task seconds by job description (CurationStream's lanes
+  * overlap; an AQE query stage or broadcast job shows its query's call
+  * site marked `(stage)`) and task seconds by job description (CurationStream's lanes
   * carry `graft-cs:<lane>`); then the minimum wall over the warm runs
   * (all but the first) and the last/first drift, which shows a gate
   * aging in one JVM. Usage:

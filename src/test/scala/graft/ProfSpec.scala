@@ -15,6 +15,13 @@ class ProfSpec extends SparkSpec {
     assert(Prof.report(recs).exists(_.startsWith("PROF p_from_list min_warm_wall_s=")))
   }
 
+  test("Prof prints an AQE stage job at its query's call site") {
+    val trace = Prof.report(Prof.run(spark, dir, Seq("q2_filter_project"), 1))
+      .filter(_.contains("   job "))
+    assert(trace.exists(_.endsWith("(stage)")), trace.mkString("\n"))
+    assert(!trace.exists(_.contains("CompletableFuture.java")), trace.mkString("\n"))
+  }
+
   test("Prof.run fails fast on an unknown gate name") {
     val e = intercept[IllegalArgumentException](
       Prof.run(spark, dir, Seq("p_from_list", "no_such_gate"), 1))
