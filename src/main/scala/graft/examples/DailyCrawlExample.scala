@@ -26,47 +26,25 @@ import org.apache.spark.sql.functions._
   */
 object DailyCrawlExample {
 
+  /** All index-artifact IO goes through the session's Hadoop
+    * FileSystem, never java.nio — `indexDir` may be hdfs://, s3a://, or
+    * a local path; java.nio would throw on a cluster URI, or report the
+    * bloom artifacts absent and silently degrade every batch to the
+    * no-prefilter path. Bloom bytes go through
+    * [[BloomDedup.saveFilter]]/[[BloomDedup.loadFilter]]. */
+  private def pathExists(spark: SparkSession, path: String): Boolean = {
+    val (f, p) = IndexGen.fs(spark, path)
+    f.exists(p)
+  }
+
   /** Compaction: scan the corpus (twice — fingerprint agg, shingle set)
     * and persist the standing index under `indexDir`:
     * `fp/` (fp → canonical id map), `bloom.bin` (serialized filter over
     * the fp column, built from the just-written map, not a third corpus
-    * scan), `sh/` + `bands/` (the [[LshIndex]]). On a real cluster these
-    * land as bucketed tables (by `fp` / `sh` / (band, sig)) so the
-    * steady-state joins are exchange-free on the corpus side. */
-  /** All index-artifact IO goes through the Hadoop FileSystem of the
-    * session, never java.nio — `indexDir` may be hdfs://, s3a://, or a
-    * local path; java.nio would throw at compaction on a cluster URI
-    * and, worse, make the existence probes in [[loadIndex]] silently
-    * report the bloom/sizes artifacts absent (degrading every batch to
-    * the no-prefilter, corpus-reaggregating path). */
-  private def fs(spark: SparkSession, path: String) = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    (p.getFileSystem(spark.sparkContext.hadoopConfiguration), p)
-  }
-
-  private def writeBytes(spark: SparkSession, path: String, bytes: Array[Byte]): Unit = {
-    val (f, p) = fs(spark, path)
-    val out = f.create(p, true)
-    try out.write(bytes) finally out.close()
-  }
-
-  private def readBytes(spark: SparkSession, path: String): Array[Byte] = {
-    val (f, p) = fs(spark, path)
-    val in = f.open(p)
-    try {
-      val buf = new java.io.ByteArrayOutputStream()
-      val chunk = new Array[Byte](64 * 1024)
-      var n = in.read(chunk)
-      while (n >= 0) { buf.write(chunk, 0, n); n = in.read(chunk) }
-      buf.toByteArray
-    } finally in.close()
-  }
-
-  private def pathExists(spark: SparkSession, path: String): Boolean = {
-    val (f, p) = fs(spark, path)
-    f.exists(p)
-  }
-
+    * scan), `sh/` + `bands/` + `sizes/` (the [[LshIndex]]), `lh/` +
+    * `lh_bloom.bin` (line hashes). On a real cluster these land as
+    * bucketed tables (by `fp` / `sh` / (band, sig)) so the steady-state
+    * joins are exchange-free on the corpus side. */
   def compactCorpus(corpus: DataFrame, indexDir: String,
                     expectedItems: Long = 1L << 20,
                     expectedLines: Long = 1L << 25,
@@ -84,7 +62,7 @@ object DailyCrawlExample {
     BloomDedup.corpusFingerprints(corpus)
       .write.mode("overwrite").parquet(s"$gen/fp")
     BloomDedup.buildFilter(spark.read.parquet(s"$gen/fp"), expectedItems)
-      .foreach(writeBytes(spark, s"$gen/bloom.bin", _))
+      .foreach(BloomDedup.saveFilter(spark, _, s"$gen/bloom.bin"))
     val idx = BloomDedup.lshIndex(corpus)
     idx.shingles.write.mode("overwrite").parquet(s"$gen/sh")
     idx.bands.write.mode("overwrite").parquet(s"$gen/bands")
@@ -102,7 +80,7 @@ object DailyCrawlExample {
       .write.mode("overwrite").parquet(s"$gen/lh")
     BloomDedup.buildFilter(spark.read.parquet(s"$gen/lh"),
         expectedLines, hashCol = "lh")
-      .foreach(writeBytes(spark, s"$gen/lh_bloom.bin", _))
+      .foreach(BloomDedup.saveFilter(spark, _, s"$gen/lh_bloom.bin"))
     // LM vocab + per-`pplBy` perplexity cutoffs: the steady-state
     // scoring artifacts — future batches score and bucket against
     // these without a corpus scan (see [[scoreBatch]]). Written only
@@ -136,7 +114,7 @@ object DailyCrawlExample {
     val spark = batch.sparkSession
     // resolve the live generation ONCE: both artifacts come from the
     // same consistent snapshot even if a recompaction promotes mid-call
-    val root = IndexGen.live(spark, indexDir).getOrElse(indexDir)
+    val root = IndexGen.liveRequired(spark, indexDir)
     if (!pathExists(spark, s"$root/lm") || !pathExists(spark, s"$root/cuts"))
       throw new IllegalStateException(
         s"$indexDir has no LM artifacts — re-run compactCorpus on a corpus with '$pplBy'")
@@ -168,34 +146,26 @@ object DailyCrawlExample {
       spark.table(s"${tablePrefix}_cuts"), pplBy)
   }
 
-  /** The persisted line-hash artifacts of [[compactCorpus]], if this
-    * index was compacted with them; None for a pre-round-8 index
-    * (line dedup then simply skips). */
+  /** The persisted line-hash artifacts of [[compactCorpus]]: the `lh`
+    * table and its Bloom bytes (None when the corpus had no lines). */
   def loadLineIndex(spark: SparkSession, indexDir: String)
-      : Option[(DataFrame, Option[Array[Byte]])] = {
-    val root = IndexGen.live(spark, indexDir).getOrElse(indexDir)
-    if (pathExists(spark, s"$root/lh")) {
-      val bloom = if (pathExists(spark, s"$root/lh_bloom.bin"))
-        Some(readBytes(spark, s"$root/lh_bloom.bin")) else None
-      Some((spark.read.parquet(s"$root/lh"), bloom))
-    } else None
+      : (DataFrame, Option[Array[Byte]]) = {
+    val root = IndexGen.liveRequired(spark, indexDir)
+    (spark.read.parquet(s"$root/lh"),
+      BloomDedup.loadFilter(spark, s"$root/lh_bloom.bin"))
   }
 
   /** The persisted artifacts of [[compactCorpus]], reloaded — all from
     * ONE [[IndexGen]]-resolved generation, so the fp map, bloom bytes
-    * and LSH tables are always a mutually consistent snapshot.
-    * Tolerates a pre-round-7 index without the `sizes` table (sizes
-    * then derive from the shingle long form at run time). */
+    * and LSH tables are always a mutually consistent snapshot. */
   def loadIndex(spark: SparkSession, indexDir: String)
       : (DataFrame, Option[Array[Byte]], LshIndex) = {
-    val root = IndexGen.live(spark, indexDir).getOrElse(indexDir)
-    val bloom = if (pathExists(spark, s"$root/bloom.bin"))
-      Some(readBytes(spark, s"$root/bloom.bin")) else None
-    val sizes = if (pathExists(spark, s"$root/sizes"))
-      Some(spark.read.parquet(s"$root/sizes")) else None
-    (spark.read.parquet(s"$root/fp"), bloom,
+    val root = IndexGen.liveRequired(spark, indexDir)
+    (spark.read.parquet(s"$root/fp"),
+      BloomDedup.loadFilter(spark, s"$root/bloom.bin"),
       LshIndex(spark.read.parquet(s"$root/sh"),
-        spark.read.parquet(s"$root/bands"), sizes))
+        spark.read.parquet(s"$root/bands"),
+        Some(spark.read.parquet(s"$root/sizes"))))
   }
 
   /** Cluster-layout variant of [[compactCorpus]]: the index lands as
@@ -220,7 +190,7 @@ object DailyCrawlExample {
       .sortBy("fp").saveAsTable(s"${tablePrefix}_fp")
     if (bloomPath.nonEmpty)
       BloomDedup.buildFilter(spark.table(s"${tablePrefix}_fp"), expectedItems)
-        .foreach(writeBytes(spark, bloomPath, _))
+        .foreach(BloomDedup.saveFilter(spark, _, bloomPath))
     // (perms, bands, n) must match the batch side's lshIndex scheme
     val idx = BloomDedup.lshIndex(corpus, perms, bands, n)
     idx.shingles.write.mode("overwrite").bucketBy(buckets, "sh")
@@ -237,7 +207,7 @@ object DailyCrawlExample {
     if (lineBloomPath.nonEmpty)
       BloomDedup.buildFilter(spark.table(s"${tablePrefix}_lh"),
           expectedLines, hashCol = "lh")
-        .foreach(writeBytes(spark, lineBloomPath, _))
+        .foreach(BloomDedup.saveFilter(spark, _, lineBloomPath))
     // LM vocab bucketed by token (the score join's key) + the tiny
     // cutoff table — same conditional + ordering rules as the
     // directory path (see compactCorpus)
@@ -254,23 +224,18 @@ object DailyCrawlExample {
     }
   }
 
-  /** The bucketed-catalog twin of [[loadLineIndex]]; None when the
-    * table prefix predates line compaction. */
+  /** The bucketed-catalog twin of [[loadLineIndex]]. */
   def loadLineIndexBucketed(spark: SparkSession, tablePrefix: String,
                             lineBloomPath: String = "")
-      : Option[(DataFrame, Option[Array[Byte]])] =
-    if (spark.catalog.tableExists(s"${tablePrefix}_lh")) {
-      val bloom = if (lineBloomPath.nonEmpty && pathExists(spark, lineBloomPath))
-        Some(readBytes(spark, lineBloomPath)) else None
-      Some((spark.table(s"${tablePrefix}_lh"), bloom))
-    } else None
+      : (DataFrame, Option[Array[Byte]]) =
+    (spark.table(s"${tablePrefix}_lh"),
+      if (lineBloomPath.nonEmpty) BloomDedup.loadFilter(spark, lineBloomPath) else None)
 
   /** The bucketed-catalog twin of [[loadIndex]]. */
   def loadIndexBucketed(spark: SparkSession, tablePrefix: String,
                         bloomPath: String = "")
       : (DataFrame, Option[Array[Byte]], LshIndex) = {
-    val bloom = if (bloomPath.nonEmpty && pathExists(spark, bloomPath))
-      Some(readBytes(spark, bloomPath)) else None
+    val bloom = if (bloomPath.nonEmpty) BloomDedup.loadFilter(spark, bloomPath) else None
     (spark.table(s"${tablePrefix}_fp"), bloom,
       LshIndex(spark.table(s"${tablePrefix}_sh"),
         spark.table(s"${tablePrefix}_bands"),
@@ -287,7 +252,7 @@ object DailyCrawlExample {
                  targets: Map[String, Double]): DataFrame =
     labelBatchLoaded(batch, benchmark,
       loadIndex(batch.sparkSession, indexDir), targets,
-      loadLineIndex(batch.sparkSession, indexDir))
+      Some(loadLineIndex(batch.sparkSession, indexDir)))
 
   /** [[labelBatch]] against an ALREADY-LOADED index — the per-epoch
     * entry point of [[labelStream]] (artifacts are immutable between
@@ -392,7 +357,7 @@ object DailyCrawlExample {
     // index loaded ONCE per stream, not per epoch — the artifacts are
     // immutable between compactions
     val index = loadIndex(stream.sparkSession, indexDir)
-    val lineIndex = loadLineIndex(stream.sparkSession, indexDir)
+    val lineIndex = Some(loadLineIndex(stream.sparkSession, indexDir))
     graft.streaming.Streams.start(stream)(_
       .foreachBatch { (batch: DataFrame, epochId: Long) =>
         labelBatchLoaded(batch, benchmark, index, targets, lineIndex)

@@ -303,18 +303,12 @@ object AnnIndex {
     * batch arbitrarily late — but at ~30 bytes per deployment the
     * consolidated file stays trivial for any realistic lifetime. */
   private def foldedMarks(spark: SparkSession, gen: String): Map[String, Long] = {
-    val p = new org.apache.hadoop.fs.Path(s"$gen/$FoldedMarks")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) Map.empty
-    else {
-      val in = fs.open(p)
-      try new String(in.readAllBytes(),
-          java.nio.charset.StandardCharsets.UTF_8)
-        .linesIterator.filter(_.nonEmpty).map { line =>
-          val Array(sid, mark) = line.split('\t')
-          sid -> mark.toLong
-        }.toMap
-      finally in.close()
+    val (fs, p) = IndexGen.fs(spark, s"$gen/$FoldedMarks")
+    IndexGen.readSmall(fs, p).fold(Map.empty[String, Long]) {
+      _.linesIterator.filter(_.nonEmpty).map { line =>
+        val Array(sid, mark) = line.split('\t')
+        sid -> mark.toLong
+      }.toMap
     }
   }
 
@@ -338,14 +332,9 @@ object AnnIndex {
     * absent file ⇔ no marks, the [[foldedMarks]] read contract). */
   private def writeMarks(fs: org.apache.hadoop.fs.FileSystem, gen: String,
                          marks: Map[String, Long]): Unit =
-    if (marks.nonEmpty) {
-      val out = fs.create(
-        new org.apache.hadoop.fs.Path(s"$gen/$FoldedMarks"), true)
-      try out.write(marks.toSeq.sorted
-        .map { case (sid, m) => s"$sid\t$m" }.mkString("\n")
-        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      finally out.close()
-    }
+    if (marks.nonEmpty)
+      IndexGen.writeSmall(fs, new org.apache.hadoop.fs.Path(s"$gen/$FoldedMarks"),
+        marks.toSeq.sorted.map { case (sid, m) => s"$sid\t$m" }.mkString("\n"))
 
   /** STREAMING index maintenance (the [[graft.examples.DailyCrawlExample]]
     * `labelStream` pattern applied to the index lifecycle): each
@@ -462,13 +451,10 @@ object AnnIndex {
     * CONCURRENCY: an already-loaded Model keeps answering from its own
     * generation during AND after the vacuum (the old generation
     * survives one promote — IndexGen keeps the predecessor); re-[[load]]
-    * to see the folded index. A LEGACY flat-layout index is migrated
-    * to the generational layout by its first vacuum (old top-level
-    * payload dirs are removed after the promote). */
+    * to see the folded index. */
   def vacuum(spark: SparkSession, indexDir: String): Unit = {
     val hadoopConf = spark.sparkContext.hadoopConfiguration
-    val root = new org.apache.hadoop.fs.Path(indexDir)
-    val fs = root.getFileSystem(hadoopConf)
+    val fs = new org.apache.hadoop.fs.Path(indexDir).getFileSystem(hadoopConf)
     val liveGen = IndexGen.liveRequired(spark, indexDir)
     val tombPath = new org.apache.hadoop.fs.Path(s"$liveGen/tombstones")
     val addPath = new org.apache.hadoop.fs.Path(s"$liveGen/additions")
@@ -607,14 +593,6 @@ object AnnIndex {
     carrySweep() // bulk, into the still-staging gen: race-free by ordering
     IndexGen.promote(spark, indexDir, gen)
     carrySweep() // stragglers from the pre-carry→promote gap
-    // legacy flat layout: this vacuum migrated it into gen-00001 —
-    // retire the superseded top-level payload (readers resolve the
-    // manifest from here on; IndexGen's GC never touches non-gen dirs)
-    if (new org.apache.hadoop.fs.Path(liveGen).toUri.getPath == root.toUri.getPath)
-      Seq("corpus", "centroids", "codebooks", "tombstones", "corpus.old",
-          "corpus.compacting", "additions", FoldedMarks).foreach { d =>
-        fs.delete(new org.apache.hadoop.fs.Path(root, d), true)
-      }
   }
 
   def load(spark: SparkSession, indexDir: String): Model = {

@@ -2,8 +2,9 @@ package graft.operators
 
 import graft.expressions.GraftFunctions
 import graft.functions.Text
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.LongType
 
 /** Incremental (batch-vs-corpus) deduplication — the realistic
   * operating mode of a 100 TB pipeline: TODAY's crawl is deduplicated
@@ -81,11 +82,19 @@ object BloomDedup {
     if (row.isNullAt(0)) None else Some(row.getAs[Array[Byte]](0))
   }
 
-  def saveFilter(bytes: Array[Byte], path: String): Unit =
-    java.nio.file.Files.write(java.nio.file.Paths.get(path), bytes)
+  /** Persist filter bytes through the path's Hadoop FileSystem, so an
+    * index on hdfs://, s3a:// or a local path takes the same route. */
+  def saveFilter(spark: SparkSession, bytes: Array[Byte], path: String): Unit = {
+    val (f, p) = IndexGen.fs(spark, path)
+    IndexGen.writeBytes(f, p, bytes)
+  }
 
-  def loadFilter(path: String): Array[Byte] =
-    java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(path))
+  /** Filter bytes saved by [[saveFilter]]; None when the file is absent
+    * ([[buildFilter]] writes no filter for an empty input). */
+  def loadFilter(spark: SparkSession, path: String): Option[Array[Byte]] = {
+    val (f, p) = IndexGen.fs(spark, path)
+    IndexGen.readBytes(f, p)
+  }
 
   /** [[incrementalExact]] against a PREBUILT fingerprint map + filter —
     * the steady-state entry point: no corpus job at all, the plan is
@@ -132,22 +141,6 @@ object BloomDedup {
                              expectedItems: Long = 1L << 20): DataFrame =
     incrementalExact(stream, corpus, textCol, idCol, expectedItems)
 
-  /** Incremental NEAR-dup: batch docs whose n-gram Jaccard similarity
-    * with some corpus doc meets `threshold`, found via MinHash+LSH
-    * band buckets ACROSS the two sets (corpus signatures join batch
-    * signatures — never corpus×corpus, never batch×batch).
-    *
-    * Scale shape: both sides reduce to (id, band, sig) band buckets —
-    * the join key is the banded signature, so the shuffle carries
-    * `bands` rows per doc, not shingles; candidates are verified with
-    * exact Jaccard over the two shingle sets (same verify as
-    * [[Dedup.minhashLsh]], restricted to candidate pairs). In steady
-    * state the corpus band buckets are precomputed once and persist as
-    * a bucketed table — only the batch side is computed per run.
-    *
-    * Returns (id, dup_of, jaccard): one row per (batch doc, corpus doc)
-    * near-dup pair at or above the threshold.
-    */
   /** The reusable LSH index of one document set: the distinct shingle
     * long form (feeds the exact-jaccard verify), the banded minhash
     * signatures (feed candidate generation), and — optionally — the
@@ -170,25 +163,15 @@ object BloomDedup {
     * for the banding scheme). */
   def lshIndex(docs: DataFrame, perms: Int = 16, bands: Int = 4, n: Int = 3,
                textCol: String = "text", idCol: String = "doc_id",
-               materialize: Boolean = true): LshIndex =
-    indexFromKeyedShingles(
-      Dedup.shingleSet(docs, textCol, idCol, n), perms, bands, materialize)
-
-  /** The index stages DOWNSTREAM of shingling — shared by [[lshIndex]]
-    * (fresh build from text) and [[migrateLshIndex]] (one-pass upgrade
-    * of a pre-r17 persisted shingle table): both feed the SAME keyed
-    * (id, sh: LongType) shingle form, so migrated and fresh indexes are
-    * identical by construction. */
-  private def indexFromKeyedShingles(keyed: DataFrame, perms: Int,
-                                     bands: Int,
-                                     materialize: Boolean): LshIndex = {
+               materialize: Boolean = true): LshIndex = {
     require(perms % bands == 0, "perms must divide into bands")
     val rows = perms / bands
     // the shingle set feeds the signatures, the set sizes AND the
     // jaccard-verify join: one lazy partitioned checkpoint (same
     // reuse-without-leak scheme as Dedup.minhashLsh; see Dedup.shared
     // for the executor-loss caveat)
-    val s = Dedup.shared(keyed.repartition(col("sh")), materialize)
+    val s = Dedup.shared(
+      Dedup.shingleSet(docs, textCol, idCol, n).repartition(col("sh")), materialize)
     val sig = Dedup.signaturesFrom(s, perms)
     val bandCols = (0 until bands).map { bnd =>
       struct(lit(bnd).as("band"),
@@ -202,38 +185,37 @@ object BloomDedup {
     LshIndex(s, banded, Some(s.groupBy("id").agg(count(lit(1)).as("n"))))
   }
 
-  /** One-pass upgrade of a PRE-r17 persisted LSH shingle table (r17
-    * verdict #1): pre-r17 indexes persisted (id, sh) with `sh` the RAW
-    * n-gram string; since r17 `sh` is the 60-bit
-    * [[graft.functions.Text.shingleKey]]. The key is a pure function of
-    * the persisted string, so the standing index upgrades WITHOUT
-    * re-shingling (or even reading) the corpus text: one metadata-sized
-    * column transform over the shingle table, then the band signatures
-    * and set sizes re-derive through the index build's existing stages
-    * ([[Dedup.signaturesFrom]] hashes the key's decimal string — band
-    * sigs of the old scheme are mutually meaningless md5s and must NOT
-    * be carried over). At the 100 TB design point this is minutes over
-    * the shingle table vs days of corpus re-ingest.
-    *
-    * `oldShingles` = the persisted pre-r17 `shingles` table (id,
-    * sh: StringType). Returns a current-scheme [[LshIndex]] — persist
-    * its three tables over the old generation. Identical to a fresh
-    * [[lshIndex]] build by construction (the per-doc shingle STRING
-    * sets are equal, and every downstream stage is shared code — spec-
-    * pinned in MigrationSpec). */
-  def migrateLshIndex(oldShingles: DataFrame, perms: Int = 16,
-                      bands: Int = 4,
-                      materialize: Boolean = true): LshIndex = {
-    val t = oldShingles.schema("sh").dataType
-    require(t == org.apache.spark.sql.types.StringType,
-      s"migrateLshIndex expects a pre-r17 shingle table (sh: StringType " +
-        s"raw n-grams); got sh: $t — a LongType table is already keyed " +
-        "(current scheme), nothing to migrate.")
-    indexFromKeyedShingles(
-      oldShingles.select(col("id"), Text.shingleKey(col("sh")).as("sh")),
-      perms, bands, materialize)
+  /** The persisted-index seam of [[incrementalLshPrebuilt]] and
+    * [[incrementalSpans]]: since r17 shingle and gram keys are 60-bit
+    * [[graft.functions.Text.shingleKey]] values (LongType). A pre-r17
+    * table (raw n-gram or md5 strings) joined against them would cast
+    * the strings to bigint → null → zero matches, silently — refuse it
+    * with a rebuild instruction instead. */
+  private def requireKeyed(df: DataFrame, keyCol: String, what: String,
+                           rebuild: String): Unit = {
+    val t = df.schema(keyCol).dataType
+    require(t == LongType,
+      s"$what carries $t keys — a pre-r17 persisted table (strings). " +
+        "Keyed (LongType) and string keys never match (silent empty " +
+        s"result); rebuild it from text with $rebuild.")
   }
 
+  /** Incremental NEAR-dup: batch docs whose n-gram Jaccard similarity
+    * with some corpus doc meets `threshold`, found via MinHash+LSH
+    * band buckets ACROSS the two sets (corpus signatures join batch
+    * signatures — never corpus×corpus, never batch×batch).
+    *
+    * Scale shape: both sides reduce to (id, band, sig) band buckets —
+    * the join key is the banded signature, so the shuffle carries
+    * `bands` rows per doc, not shingles; candidates are verified with
+    * exact Jaccard over the two shingle sets (same verify as
+    * [[Dedup.minhashLsh]], restricted to candidate pairs). In steady
+    * state the corpus band buckets are precomputed once and persist as
+    * a bucketed table — only the batch side is computed per run.
+    *
+    * Returns (id, dup_of, jaccard): one row per (batch doc, corpus doc)
+    * near-dup pair at or above the threshold.
+    */
   def incrementalLsh(batch: DataFrame, corpus: DataFrame, threshold: Double,
                      perms: Int = 16, bands: Int = 4, n: Int = 3,
                      textCol: String = "text", idCol: String = "doc_id",
@@ -246,26 +228,13 @@ object BloomDedup {
   /** [[incrementalLsh]] against PREBUILT indexes — the steady-state
     * entry point (corpus side loaded from its persisted tables). Both
     * indexes must share the same (perms, bands, n) scheme — AND the
-    * same shingle-key scheme: since r17 the shingle long form carries
-    * 60-bit keys ([[graft.functions.Text.shingleKey]], LongType), not
-    * raw n-gram strings. A pre-r17 PERSISTED index (string `sh`)
-    * joined against a current one would cast the strings to bigint →
-    * null → ZERO matches, silently: the verify join finds no shared
-    * shingles and every candidate drops. The type check turns that
-    * silent emptiness into a rebuild instruction. */
+    * same shingle-key scheme (see [[requireKeyed]]). */
   def incrementalLshPrebuilt(batchIdx: LshIndex, corpusIdx: LshIndex,
                              threshold: Double): DataFrame = {
     val (bs, bband) = (batchIdx.shingles, batchIdx.bands)
     val (cs, cband) = (corpusIdx.shingles, corpusIdx.bands)
     Seq("batch" -> bs, "corpus" -> cs).foreach { case (side, s) =>
-      val t = s.schema("sh").dataType
-      require(t == org.apache.spark.sql.types.LongType,
-        s"$side LSH index carries $t shingles — a pre-r17 persisted index " +
-          "(raw n-gram strings). Keyed (LongType) and string shingle sets " +
-          "never match in the verify join (silent zero-recall); upgrade it " +
-          "IN ONE PASS with migrateLshIndex(oldShingles) — a column " +
-          "transform over the persisted shingle table, no corpus " +
-          "re-shingling — or rebuild from text with lshIndex().")
+      requireKeyed(s, "sh", s"$side LSH index", "lshIndex()")
     }
     val cand = bband.as("a").join(cband.as("b"),
         col("a.band") === col("b.band") && col("a.sig") === col("b.sig"))
@@ -361,29 +330,6 @@ object BloomDedup {
                   idCol: String = "doc_id"): DataFrame =
     Dedup.tokenGrams(corpus, k, textCol, idCol).select("h").distinct()
 
-  /** One-pass upgrade of a PRE-r17 persisted gram table (r17 verdict
-    * #1): pre-r17 [[corpusGrams]] stored `h` as the FULL 32-char
-    * md5(gram) hex string; the current 60-bit key is BY DEFINITION its
-    * first 15 hex chars as a bigint ([[graft.functions.Text.shingleKey]]
-    * applied to the gram — `conv(substring(h,1,15),16,10)`), so the
-    * standing table upgrades without re-tokenizing a single corpus
-    * document: one metadata-sized column transform (~minutes over the
-    * distinct-gram table at 100 TB corpus scale vs a full re-ingest).
-    * The trailing `.distinct()` collapses the rare 15-hex-prefix
-    * collisions so the result is set-identical to a fresh
-    * [[corpusGrams]] build (spec-pinned in MigrationSpec). Persist the
-    * result over the old generation (partitioned/bucketed by `h`,
-    * ~8 B/gram — a quarter of the old layout). */
-  def migrateGramTable(old: DataFrame): DataFrame = {
-    val t = old.schema("h").dataType
-    require(t == org.apache.spark.sql.types.StringType,
-      s"migrateGramTable expects a pre-r17 gram table (h: StringType " +
-        s"full md5 hex); got h: $t — a LongType table is already keyed " +
-        "(current scheme), nothing to migrate.")
-    old.select(conv(substring(col("h"), 1, 15), 16, 10).cast("long").as("h"))
-      .distinct()
-  }
-
   /** Incremental ExactSubstr (Lee et al. 2021) — token spans of BATCH
     * docs duplicating content that exists anywhere else: in the
     * standing corpus ([[corpusGrams]]) or in ANOTHER batch doc. By
@@ -405,17 +351,7 @@ object BloomDedup {
                        k: Int = 5, minRun: Int = 4,
                        textCol: String = "text", idCol: String = "doc_id",
                        materialize: Boolean = true): DataFrame = {
-    // same persisted-index seam as incrementalLshPrebuilt: a pre-r17
-    // gram table (md5 strings) semi-joined against 60-bit keys casts
-    // to null and marks EVERY gram novel, silently — refuse instead
-    val ht = corpusGrams.schema("h").dataType
-    require(ht == org.apache.spark.sql.types.LongType,
-      s"corpus gram table carries $ht hashes — a pre-r17 persisted table " +
-        "(md5 strings). Keyed (LongType) and string grams never match in " +
-        "the semi-join (silent all-novel result); upgrade it IN ONE PASS " +
-        "with migrateGramTable(old) — the key is a prefix of the stored " +
-        "md5, no corpus re-ingest — or rebuild from text with " +
-        "corpusGrams().")
+    requireKeyed(corpusGrams, "h", "corpus gram table", "corpusGrams()")
     GraftFunctions.register(batch.sparkSession)
     val grams = Dedup.shared(
       Dedup.tokenGrams(batch, k, textCol, idCol).repartition(col("h")),

@@ -85,41 +85,15 @@ object CurationStream {
   val SigVersion = 2
   private val SigVersionFile = "_sig_version"
 
-  /** Marker I/O, one copy (shared by [[checkSigVersion]] and
-    * [[migrateSigState]] — the IndexGen readSmall/writeSmall idea):
-    * None = no marker on disk. */
-  private def readMarker(fs: org.apache.hadoop.fs.FileSystem,
-                         marker: org.apache.hadoop.fs.Path): Option[Int] =
-    if (!fs.exists(marker)) None
-    else {
-      val in = fs.open(marker)
-      try Some(new String(in.readAllBytes(),
-        java.nio.charset.StandardCharsets.UTF_8).trim.toInt)
-      finally in.close()
-    }
-
-  private def stampMarker(fs: org.apache.hadoop.fs.FileSystem,
-                          marker: org.apache.hadoop.fs.Path): Unit = {
-    val out = fs.create(marker, true)
-    try out.write(s"$SigVersion\n".getBytes(
-      java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-  }
-
   private def checkSigVersion(spark: SparkSession, stateDir: String): Unit = {
-    val root = new org.apache.hadoop.fs.Path(stateDir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val marker = new org.apache.hadoop.fs.Path(s"$stateDir/$SigVersionFile")
-    readMarker(fs, marker) match {
+    val (fs, marker) = IndexGen.fs(spark, s"$stateDir/$SigVersionFile")
+    IndexGen.readSmall(fs, marker).map(_.toInt) match {
       case Some(v) =>
         require(v == SigVersion,
           s"dedup state at $stateDir carries signature scheme v$v; this build " +
             s"writes v$SigVersion — band signatures across schemes never match " +
-            "(silent near-dup recall loss). Run migrateSigState(spark, " +
-            "stateDir) — it recomputes the band signatures from the STAGED " +
-            "gated text already in the state (no raw re-ingest, no media " +
-            "re-decode, no re-gating) — or pin the library version that " +
-            "wrote it.")
+            "(silent near-dup recall loss). Rebuild the state from source " +
+            "with this build, or pin the library version that wrote it.")
       case None =>
         // no marker: EITHER a fresh dir (stamp it) or state written
         // before the marker existed (= scheme 1: refuse — proceeding
@@ -130,10 +104,8 @@ object CurationStream {
         require(!hasState,
           s"dedup state at $stateDir predates the signature-scheme marker " +
             s"(scheme 1, raw-shingle signatures); this build writes v$SigVersion " +
-            "— run migrateSigState(spark, stateDir): it recomputes the band " +
-            "signatures from the STAGED gated text already in the state (no " +
-            "raw re-ingest).")
-        stampMarker(fs, marker)
+            "— rebuild the state from source with this build.")
+        IndexGen.writeSmall(fs, marker, s"$SigVersion\n")
     }
   }
 
@@ -266,16 +238,9 @@ object CurationStream {
     * single monotonic bound: one stream feeds one state dir, so a
     * per-stream map degenerates to one number. */
   def foldWatermark(spark: SparkSession, stateDir: String): Long =
-    IndexGen.live(spark, s"$stateDir/$CompactedRoot").map { gen =>
-      val p = new org.apache.hadoop.fs.Path(s"$gen/$WatermarkFile")
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (!fs.exists(p)) 0L
-      else {
-        val in = fs.open(p)
-        try new String(in.readAllBytes(),
-          java.nio.charset.StandardCharsets.UTF_8).trim.toLong
-        finally in.close()
-      }
+    IndexGen.live(spark, s"$stateDir/$CompactedRoot").flatMap { gen =>
+      val (fs, p) = IndexGen.fs(spark, s"$gen/$WatermarkFile")
+      IndexGen.readSmall(fs, p).map(_.toLong)
     }.getOrElse(0L)
 
   /** One state table of the live compacted generation, if present. */
@@ -419,12 +384,8 @@ object CurationStream {
     }) })(spark)
     // the watermark is part of the payload — it lands before promote,
     // so a reader never sees a generation without its fold bound
-    val genFs = new org.apache.hadoop.fs.Path(gen).getFileSystem(hc)
-    val out = genFs.create(
-      new org.apache.hadoop.fs.Path(s"$gen/$WatermarkFile"), true)
-    try out.write(uptoEpoch.toString
-      .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
+    val (genFs, wm) = IndexGen.fs(spark, s"$gen/$WatermarkFile")
+    IndexGen.writeSmall(genFs, wm, uptoEpoch.toString)
     IndexGen.promote(spark, root, gen)
     // retire the folded live partitions (post-promote GC — crash-safe,
     // see the matrix above)
@@ -441,125 +402,6 @@ object CurationStream {
     }
   }
 
-  /** One-pass signature-scheme migration of a standing state dir (r17
-    * verdict #1 — the cheapest valid remedy the version guard names):
-    * the `bands` table is the ONLY state whose rows are a function of
-    * the shingle scheme, and it is a pure PER-DOC function of the
-    * staged gated text — which the state already carries in full (the
-    * `gated` table retains text because [[finalizeCorpus]] emits it).
-    * So a scheme upgrade recomputes band signatures from STAGED text:
-    * no raw re-ingest of the source corpus, no media re-decode, no
-    * re-gating — at the 100 TB design point, a signature pass over the
-    * survivors vs days of full pipeline replay.
-    *
-    * What is (correctly) left untouched: `gated` (scheme-independent),
-    * `edges` (jaccard-VERIFIED pairs — true near-dups under any
-    * scheme; both schemes are equal-recall approximations, so edges
-    * found under the old scheme stay valid facts), `img_*`/`aud_*`
-    * (pixel/audio-derived, no text shingles anywhere).
-    *
-    * Covers both state generations: live `__epoch=` partitions are
-    * rebuilt in place via dynamic partition overwrite (each banded row
-    * keeps its doc's epoch, so [[ingestEpoch]]'s time-invariant
-    * [[accBefore]] reads are unchanged); a compacted generation is
-    * rebuilt through the existing [[IndexGen]] fold machinery — a NEW
-    * generation with `bands` recomputed and every other table carried
-    * over re-clustered, promoted atomically. Crash-safe the same way
-    * ingest and folds are: an interrupted migration leaves either the
-    * old marker (re-run migrates again — idempotent; already-current
-    * state is a no-op) or an unpromoted staging generation (invisible,
-    * GC'd by the next fold).
-    *
-    * Contract (spec-pinned in MigrationSpec): migrated `bands` rows
-    * are VALUE-EQUAL to what a current-version ingest of the same
-    * gated docs writes (one shared copy of the signature arithmetic —
-    * sigOf/bandedOf), so the state resumes exactly as a
-    * current-version state with the same tables would. One honest
-    * nuance on `edges`: pairs DISCOVERED under the old scheme are
-    * retained (they are exact-jaccard-VERIFIED true near-dups — valid
-    * facts under any scheme), and since the two schemes are
-    * independent equal-recall hash families, a v1-found borderline
-    * pair might not have been re-found by a v2-from-scratch run (and
-    * vice versa). Migrated state is therefore equivalent-or-better in
-    * dedup recall vs re-ingesting from scratch, not bit-identical to
-    * it; the MigrationSpec hash-equality holds because its three
-    * state dirs share identically-generated edges and differ only in
-    * the bands scheme — the seam under test. */
-  def migrateSigState(spark: SparkSession, stateDir: String,
-                      cfg: Curation.Config = Curation.Config()): Unit = {
-    val hc = spark.sparkContext.hadoopConfiguration
-    val marker = new org.apache.hadoop.fs.Path(s"$stateDir/$SigVersionFile")
-    val fs = marker.getFileSystem(hc)
-    readMarker(fs, marker) match {
-      case Some(SigVersion) => return // already current: idempotent no-op
-      case Some(v) =>
-        require(v < SigVersion,
-          s"state at $stateDir carries scheme v$v, NEWER than this build's " +
-            s"v$SigVersion — migration only goes forward; use the library " +
-            "version that wrote it")
-      case None => // pre-marker (scheme 1) state: migrate and stamp
-    }
-    def rebuiltBands(gated: DataFrame): DataFrame = {
-      // banded rows are per-doc: one pass rebuilds every epoch at once,
-      // each row re-attached to its doc's epoch (doc_ids are unique
-      // across the accumulated state — replays overwrite their epoch)
-      val epochs = gated.select(col("doc_id").as("__mid"), col(Epoch))
-      bandedOf(sigOf(gated.drop(Epoch), cfg), cfg)
-        .join(epochs, col("id") === col("__mid")).drop("__mid")
-    }
-    // live epochs: dynamic overwrite replaces exactly the rebuilt ones.
-    // repartition(__epoch) bounds the per-epoch file count the same way
-    // writeEpoch's coalesce(4) does (each epoch's rows land in one
-    // task → one file per partition dir, not one per shuffle task) —
-    // accBefore's per-micro-batch listings must stay cheap after a
-    // migration, exactly as after an ingest
-    rawTable(spark, s"$stateDir/gated").foreach { g =>
-      rebuiltBands(g).repartition(col(Epoch))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy(Epoch)
-        .parquet(s"$stateDir/bands")
-    }
-    // compacted generation: new generation via the fold machinery
-    IndexGen.live(spark, s"$stateDir/$CompactedRoot").foreach { gen =>
-      val root = s"$stateDir/$CompactedRoot"
-      val newGen = IndexGen.begin(spark, root)
-      StateTables.foreach { case (t, keys) =>
-        val df =
-          if (t == "bands") {
-            val gp = new org.apache.hadoop.fs.Path(s"$gen/gated")
-            if (fs.exists(gp))
-              Some(rebuiltBands(spark.read.parquet(gp.toString)))
-            else None
-          } else {
-            val tp = new org.apache.hadoop.fs.Path(s"$gen/$t")
-            if (fs.exists(tp)) Some(spark.read.parquet(tp.toString)) else None
-          }
-        // same empty-table rule as compactState: zero-row tables stay
-        // absent (a footer-less dir bricks the read)
-        df.filter(!_.isEmpty).foreach { d =>
-          d.repartition(keys.map(col): _*)
-            .sortWithinPartitions(keys.map(col): _*)
-            .write.mode("overwrite").parquet(s"$newGen/$t")
-        }
-      }
-      // the fold bound is part of the payload — carry it over before
-      // promote, exactly as compactState does
-      val wm = new org.apache.hadoop.fs.Path(s"$gen/$WatermarkFile")
-      if (fs.exists(wm)) {
-        val in = fs.open(wm)
-        val bytes = try in.readAllBytes() finally in.close()
-        val out = fs.create(
-          new org.apache.hadoop.fs.Path(s"$newGen/$WatermarkFile"), true)
-        try out.write(bytes) finally out.close()
-      }
-      IndexGen.promote(spark, root, newGen)
-    }
-    // stamp LAST: a crash anywhere above leaves the old marker and a
-    // re-runnable migration
-    stampMarker(fs, marker)
-  }
-
   /** Per-doc minhash signature agg over one gated set:
     * (id, n, h0..h{perms-1}). Signatures + set sizes in ONE keyed agg:
     * per-occurrence hashing (the md5 formula of
@@ -567,10 +409,7 @@ object CurationStream {
     * vocabulary-distinct + join-back shape at MICRO-BATCH granularity —
     * a batch's occurrence list is near its vocabulary size, so the
     * corpus-scale vocab reuse would cost two extra exchanges per epoch
-    * for nothing; `n` rides the same agg. Shared by [[ingestEpoch]]
-    * and [[migrateSigState]] — ONE copy of the signature arithmetic is
-    * what makes "migrated state == freshly-ingested state" hold by
-    * construction. */
+    * for nothing; `n` rides the same agg. */
   private def sigOf(gated: DataFrame, cfg: Curation.Config): DataFrame = {
     val s = Stage.reuse(Dedup.shingleSet(gated, "text", "doc_id", 3))
     // r20 note: the vocab-distinct + join-back form (hash per DISTINCT

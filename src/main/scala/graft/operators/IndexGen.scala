@@ -42,10 +42,6 @@ import org.apache.spark.sql.SparkSession
   * (the old live, still on disk); after the rename, before GC → extra
   * old generations linger until the next promote. Every state is
   * re-runnable.
-  *
-  * LEGACY layout: an `indexDir` with payload at top level (no
-  * `MANIFEST`, no committed generation) resolves to itself, so indexes
-  * written before this scheme keep loading unchanged.
   */
 object IndexGen {
 
@@ -53,26 +49,34 @@ object IndexGen {
   private val Commit = "_COMMITTED"
   private val GenPrefix = "gen-"
 
-  private def fs(spark: SparkSession, dir: String): (FileSystem, Path) = {
+  private[graft] def fs(spark: SparkSession, dir: String): (FileSystem, Path) = {
     val p = new Path(dir)
     (p.getFileSystem(spark.sparkContext.hadoopConfiguration), p)
   }
 
-  private def readSmall(f: FileSystem, p: Path): Option[String] =
+  /** Small-file I/O through the path's Hadoop FileSystem — the one copy
+    * for every index and state artifact that is not a table: manifests,
+    * commit markers, signature-scheme markers, fold watermarks,
+    * folded-epoch marks, Bloom filter bytes. None = no file. */
+  private[graft] def readBytes(f: FileSystem, p: Path): Option[Array[Byte]] =
     if (!f.exists(p)) None
     else {
       val in = f.open(p)
-      try {
-        val bytes = in.readAllBytes()
-        Some(new String(bytes, java.nio.charset.StandardCharsets.UTF_8).trim)
-      } finally in.close()
+      try Some(in.readAllBytes()) finally in.close()
     }
 
-  private def writeSmall(f: FileSystem, p: Path, s: String): Unit = {
+  /** [[readBytes]] as trimmed UTF-8 text. */
+  private[graft] def readSmall(f: FileSystem, p: Path): Option[String] =
+    readBytes(f, p).map(b =>
+      new String(b, java.nio.charset.StandardCharsets.UTF_8).trim)
+
+  private[graft] def writeBytes(f: FileSystem, p: Path, bytes: Array[Byte]): Unit = {
     val out = f.create(p, true)
-    try out.write(s.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
+    try out.write(bytes) finally out.close()
   }
+
+  private[graft] def writeSmall(f: FileSystem, p: Path, s: String): Unit =
+    writeBytes(f, p, s.getBytes(java.nio.charset.StandardCharsets.UTF_8))
 
   private def genCounter(name: String): Option[Long] =
     if (name.startsWith(GenPrefix))
@@ -188,9 +192,8 @@ object IndexGen {
 
   /** Resolve the live generation's payload root: the manifest's
     * generation, falling back to `MANIFEST.prev` (mid-promote crash
-    * window), then to the newest COMMITTED generation (double-crash),
-    * then to the legacy flat layout (indexDir itself, when it exists
-    * with non-generation content). None = nothing readable here. */
+    * window), then to the newest COMMITTED generation (double-crash).
+    * None = no committed generation here. */
   def live(spark: SparkSession, indexDir: String): Option[String] = {
     val (f, root) = fs(spark, indexDir)
     def resolve(name: String): Option[String] = {
@@ -205,18 +208,11 @@ object IndexGen {
         // the same scheme/prefix as the manifest-resolved branch
         // (listStatus qualifies paths with file:/ etc.)
         .map { case (_, p) => new Path(root, p.getName).toString })
-      .orElse {
-        if (f.exists(root) && f.listStatus(root).exists { s =>
-            val n = s.getPath.getName
-            !n.startsWith(GenPrefix) && !n.startsWith(Manifest) })
-          Some(indexDir)
-        else None
-      }
   }
 
   /** [[live]] for writers/readers that require an index to exist. */
   def liveRequired(spark: SparkSession, indexDir: String): String =
     live(spark, indexDir).getOrElse(
       throw new IllegalStateException(
-        s"$indexDir has no committed generation and no legacy payload"))
+        s"$indexDir has no committed generation"))
 }

@@ -367,13 +367,11 @@ object LlmOps {
           .write.mode("overwrite").parquet(s"$staging/lines")
         BloomDedup.buildFilter(
             spark.read.parquet(s"$staging/lines"), hashCol = "lh")
-          .foreach(BloomDedup.saveFilter(_, s"$staging/bloom.bin"))
+          .foreach(BloomDedup.saveFilter(spark, _, s"$staging/bloom.bin"))
       }
     val corpusLines = spark.read.parquet(s"$idxDir/lines")
-    val bloomPath = java.nio.file.Paths.get(idxDir, "bloom.bin")
-    val filt = if (java.nio.file.Files.exists(bloomPath))
-      Some(BloomDedup.loadFilter(bloomPath.toString)) else None
-    BloomDedup.incrementalLineDedup(lined.filter(bucket >= 95), corpusLines, filt)
+    BloomDedup.incrementalLineDedup(lined.filter(bucket >= 95), corpusLines,
+        BloomDedup.loadFilter(spark, s"$idxDir/bloom.bin"))
       .orderBy("doc_id")
   }
 

@@ -388,48 +388,6 @@ class AnnIndexSpec extends SparkSpec {
       "staging litter without __epoch= partitions must be ignored")
   }
 
-  test("a migrating vacuum retires legacy additions and marks, not just corpus dirs") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-annidx-legacy").toString
-    corpusRows.toDF("vec_id", "embedding").write.parquet(s"$dir/corpus.parquet")
-    val corpus = spark.read.parquet(s"$dir/corpus.parquet")
-    // build a LEGACY flat-layout index: compact into a scratch dir and
-    // copy the generation's payload to the index root (the pre-IndexGen
-    // on-disk shape), including streamed-maintenance state
-    AnnIndex.compact(corpus, s"$dir/scratch", cells = 4, m = 2, ksub = 4,
-      coarseIters = 4, pqIters = 3, trainBound = 0L)
-    val scratchModel = AnnIndex.load(spark, s"$dir/scratch")
-    AnnIndex.addEpoch((0 until 4).map(c => ((300 + c).toLong, member(bases(c), 11)))
-      .toDF("vec_id", "embedding"), s"$dir/scratch", scratchModel, 3L)
-    val srcGen = IndexGen.liveRequired(spark, s"$dir/scratch")
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val legacy = new org.apache.hadoop.fs.Path(s"$dir/legacy")
-    fs.mkdirs(legacy)
-    fs.listStatus(new org.apache.hadoop.fs.Path(srcGen))
-      .filter(s => !s.getPath.getName.startsWith("_C")) // skip _COMMITTED/_CLAIM
-      .foreach { s =>
-        org.apache.hadoop.fs.FileUtil.copy(fs, s.getPath, fs,
-          new org.apache.hadoop.fs.Path(legacy, s.getPath.getName),
-          false, spark.sparkContext.hadoopConfiguration)
-      }
-    // a mark file at the legacy root too (an index that saw a vacuum)
-    fs.create(new org.apache.hadoop.fs.Path(legacy, "_folded_epoch_marks"), true)
-      .close()
-    assert(AnnIndex.load(spark, s"$dir/legacy").table.count() == corpusRows.size + 4)
-    // remove something so the migrating vacuum has a fold to do
-    AnnIndex.remove(Seq(300L).toDF("vec_id"), s"$dir/legacy")
-    AnnIndex.vacuum(spark, s"$dir/legacy")
-    assert(AnnIndex.load(spark, s"$dir/legacy").table.count() == corpusRows.size + 3)
-    // the ENTIRE legacy payload is retired — pre-fix, additions/ and the
-    // stale mark file lingered at the root forever (and IndexGen's
-    // legacy fallback could resolve to them if generations were lost)
-    Seq("corpus", "centroids", "codebooks", "tombstones",
-        "additions", "_folded_epoch_marks").foreach { d =>
-      assert(!fs.exists(new org.apache.hadoop.fs.Path(legacy, d)),
-        s"migrating vacuum must retire legacy $d")
-    }
-  }
-
   test("probing statically prunes partitions of the codes table (nprobe/cells scan)") {
     val dir = java.nio.file.Files.createTempDirectory("graft-annidx-prune").toString
     corpusRows.toDF("vec_id", "embedding").write.parquet(s"$dir/corpus.parquet")

@@ -101,8 +101,8 @@ class BloomDedupSpec extends SparkSpec {
     val fps = corpusFingerprints(corpus)
     val bytes = buildFilter(fps).get
     val path = java.nio.file.Files.createTempFile("graft-bloom", ".bin").toString
-    saveFilter(bytes, path)
-    val loaded = loadFilter(path)
+    saveFilter(spark, bytes, path)
+    val loaded = loadFilter(spark, path).get
     assert(java.util.Arrays.equals(bytes, loaded))
     val direct = BloomDedup.incrementalExact(batch, corpus).orderBy("id").collect().toSeq
     val steady = incrementalExactPrebuilt(batch, fps, Some(loaded))
@@ -110,6 +110,23 @@ class BloomDedupSpec extends SparkSpec {
     assert(steady == direct)
     // empty fingerprint set builds no filter
     assert(buildFilter(fps.filter(lit(false))).isEmpty)
+  }
+
+  test("a filter saved to a faulty:/// path round-trips through that filesystem") {
+    import graft.operators.BloomDedup._
+    spark.sparkContext.hadoopConfiguration
+      .set("fs.faulty.impl", classOf[FaultyFileSystem].getName)
+    val bytes = buildFilter(corpusFingerprints(corpus)).get
+    val dir = java.nio.file.Files.createTempDirectory("graft-bloom-fs")
+    val path = s"faulty://$dir/bloom.bin"
+    assert(loadFilter(spark, path).isEmpty, "an absent filter loads as None")
+    saveFilter(spark, bytes, path)
+    // the faulty:// filesystem delegates to the local one: the bytes
+    // land at the path's local counterpart, not at a relative path
+    val local = dir.resolve("bloom.bin")
+    assert(java.nio.file.Files.exists(local))
+    assert(java.util.Arrays.equals(java.nio.file.Files.readAllBytes(local), bytes))
+    assert(java.util.Arrays.equals(loadFilter(spark, path).get, bytes))
   }
 
   test("incrementalLsh finds cross-set near-dups only (never corpus x corpus)") {
@@ -163,6 +180,17 @@ class BloomDedupSpec extends SparkSpec {
       incrementalLshPrebuilt(lshIndex(b), oldIdx, threshold = 0.5)
     }
     assert(e.getMessage.contains("pre-r17") && e.getMessage.contains("rebuild"))
+  }
+
+  test("a pre-r17 string-keyed persisted gram table is refused, not silently all-novel") {
+    val b = Seq((10L, "alpha beta gamma delta epsilon zeta")).toDF("doc_id", "text")
+    // the old on-disk shape: full md5 hex strings in `h`
+    val oldGrams = Seq("9e107d9d372bb6826bd81d3542a419d6").toDF("h")
+    val e = intercept[IllegalArgumentException] {
+      BloomDedup.incrementalSpans(b, oldGrams, k = 3, minRun = 2)
+    }
+    assert(e.getMessage.contains("pre-r17") && e.getMessage.contains("rebuild") &&
+      e.getMessage.contains("corpusGrams()"))
   }
 
   test("bucketed index: same result, corpus band side joins WITHOUT an exchange") {

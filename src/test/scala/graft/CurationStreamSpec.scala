@@ -6,6 +6,8 @@ import graft.queries.LlmOps
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 
+import scala.jdk.CollectionConverters._
+
 /** The streaming curation twin's contract: the SAME corpus through
   * id-hashed micro-batches — gates, dedup-edge generation and media
   * signatures computed per epoch against accumulated state, one
@@ -166,6 +168,71 @@ class CurationStreamSpec extends SparkSpec {
 
     org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(root))
     org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(refRoot))
+  }
+
+  test("a failed lane write surfaces as is; no sibling writes to __epoch=N after it; a replay heals") {
+    val hc = spark.sparkContext.hadoopConfiguration
+    hc.set("fs.faulty.impl", classOf[FaultyFileSystem].getName)
+    val docs = spark.read.parquet(s"$dir/documents.parquet")
+      .select(col("doc_id").cast("long"), col("text"))
+      .filter(col("doc_id") < 400)
+      .as[(Long, String)].collect().toSeq
+    val byEpoch = (0 until 2).map(e =>
+      docs.filter(r => java.lang.Math.floorMod(r._1, 2L) == e))
+    val root = java.nio.file.Files.createTempDirectory("graft-cstream-lane")
+    // unfaulted reference; its epoch-1 ingest bounds every lane's jobs
+    val ref = s"$root/ref"
+    ingest(ref, byEpoch(0), 0L)
+    val t0 = System.nanoTime()
+    ingest(ref, byEpoch(1), 1L)
+    val epochMs = (System.nanoTime() - t0) / 1000000L
+
+    val state = s"faulty://$root/state"
+    ingest(state, byEpoch(0), 0L)
+    // the image lane's state writes fail; the text and audio lanes are
+    // untouched by the injector and would run on if not stopped
+    FaultInjector.arm(0, kill = false, only = _.toString.contains("/img_sigs"))
+    val thrown =
+      try intercept[Throwable](ingest(state, byEpoch(1), 1L))
+      finally FaultInjector.disarm()
+    assert(FaultInjector.isInjected(thrown), s"not the injected failure: $thrown")
+
+    val tables = Seq("gated", "edges", "bands", "img_sigs", "img_losers",
+      "aud_sigs", "aud_losers")
+    // listed on the local side of faulty:// (the same files)
+    def epochFiles(): Set[(String, Long, Long)] = tables.flatMap { t =>
+      val p = root.resolve(s"state/$t/__epoch=1")
+      if (!java.nio.file.Files.exists(p)) Nil
+      else {
+        val walk = java.nio.file.Files.walk(p)
+        try walk.iterator().asScala.filter(java.nio.file.Files.isRegularFile(_))
+          .map(f => (f.toString, java.nio.file.Files.size(f),
+            java.nio.file.Files.getLastModifiedTime(f).toMillis)).toList
+        finally walk.close()
+      }
+    }.toSet
+    val atFailure = epochFiles()
+    assert(atFailure.exists(_._1.contains("/gated/")),
+      "the serial gated write precedes the lanes")
+    Thread.sleep(math.max(epochMs, 2000L))
+    assert(epochFiles() == atFailure, "a sibling lane wrote after the failure surfaced")
+
+    // the disarmed replay of epoch 1 yields the unfaulted state
+    ingest(state, byEpoch(1), 1L)
+    tables.foreach { t =>
+      val (a, b) = (CurationStream.stateTable(spark, state, t),
+        CurationStream.stateTable(spark, ref, t))
+      assert(a.isDefined == b.isDefined, t)
+      a.zip(b).foreach { case (x, y) =>
+        val cols = y.columns.sorted.map(col).toSeq
+        val (xs, ys) = (x.select(cols: _*), y.select(cols: _*))
+        assert(xs.count() == ys.count() && xs.exceptAll(ys).isEmpty &&
+          ys.exceptAll(xs).isEmpty, s"$t differs from the unfaulted run")
+      }
+    }
+    assert(collectRows(CurationStream.finalizeCorpus(spark, state)) ==
+      collectRows(CurationStream.finalizeCorpus(spark, ref)))
+    org.apache.commons.io.FileUtils.deleteDirectory(root.toFile)
   }
 
   test("inParallel: the first lane failure cancels sibling jobs and is rethrown as is") {

@@ -36,12 +36,16 @@ object FaultInjector {
   @volatile private var killMode = true
   private val counter = new java.util.concurrent.atomic.AtomicInteger(0)
   @volatile private var crashAt = Int.MaxValue
+  @volatile private var scope: Path => Boolean = _ => true
 
   /** Arm the injector: the `at`-th mutation from now (0-based) and all
-    * later ones throw. `kill` picks the mode (see class doc). */
-  def arm(at: Int, kill: Boolean): Unit = {
+    * later ones throw. `kill` picks the mode (see class doc); `only`
+    * limits counting and failing to mutations of matching paths (a
+    * rename matches when either side does). */
+  def arm(at: Int, kill: Boolean, only: Path => Boolean = _ => true): Unit = {
     crashAt = at
     killMode = kill
+    scope = only
     counter.set(0)
     armed = true
   }
@@ -64,8 +68,8 @@ object FaultInjector {
     false
   }
 
-  private[graft] def gate(): Unit =
-    if (armed && counter.getAndIncrement() >= crashAt) {
+  private[graft] def gate(paths: Path*): Unit =
+    if (armed && paths.exists(scope) && counter.getAndIncrement() >= crashAt) {
       if (killMode) throw new InjectedKill else throw new InjectedAbort
     }
 }
@@ -77,29 +81,29 @@ class FaultyFileSystem extends RawLocalFileSystem {
   override def create(f: Path, permission: FsPermission, overwrite: Boolean,
                       bufferSize: Int, replication: Short, blockSize: Long,
                       progress: Progressable): org.apache.hadoop.fs.FSDataOutputStream = {
-    FaultInjector.gate()
+    FaultInjector.gate(f)
     super.create(f, permission, overwrite, bufferSize, replication, blockSize, progress)
   }
 
   override def rename(src: Path, dst: Path): Boolean = {
-    FaultInjector.gate()
+    FaultInjector.gate(src, dst)
     super.rename(src, dst)
   }
 
   override def delete(f: Path, recursive: Boolean): Boolean = {
-    FaultInjector.gate()
+    FaultInjector.gate(f)
     super.delete(f, recursive)
   }
 
   // RawLocalFileSystem overrides BOTH mkdirs arities directly (the
   // 1-arg one does not route through the 2-arg one) — gate both
   override def mkdirs(f: Path): Boolean = {
-    FaultInjector.gate()
+    FaultInjector.gate(f)
     super.mkdirs(f)
   }
 
   override def mkdirs(f: Path, permission: FsPermission): Boolean = {
-    FaultInjector.gate()
+    FaultInjector.gate(f)
     super.mkdirs(f, permission)
   }
 }

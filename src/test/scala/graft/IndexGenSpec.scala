@@ -126,10 +126,36 @@ class IndexGenSpec extends SparkSpec {
     assert(err.getMessage.contains("garbage-collected"))
   }
 
-  test("legacy flat layout resolves to the dir itself") {
-    val dir = tmp("legacy")
-    Seq((1L, "a")).toDF("id", "t").write.parquet(s"$dir/idx/fp")
-    assert(IndexGen.live(spark, s"$dir/idx").contains(s"$dir/idx"))
+  test("a flat payload without MANIFEST or generation is no index: live is None, load fails fast") {
+    val dir = tmp("flat")
+    // an ANN index payload copied to the top level of `idx`: parquet
+    // dirs, but no MANIFEST and no generation
+    def vec(id: Long): Seq[Float] = (0 until 8).map(d => ((id * (d + 3)) % 7).toFloat - 3f)
+    AnnIndex.compact((1L to 20L).map(i => (i, vec(i))).toDF("vec_id", "embedding"),
+      s"$dir/src", cells = 2, m = 2, ksub = 4, coarseIters = 3, pqIters = 2,
+      trainBound = 0L)
+    val gen = new org.apache.hadoop.fs.Path(IndexGen.liveRequired(spark, s"$dir/src"))
+    val idx = s"$dir/idx"
+    val idxPath = new org.apache.hadoop.fs.Path(idx)
+    val fs = idxPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    fs.mkdirs(idxPath)
+    fs.listStatus(gen).filter(_.isDirectory).foreach { s =>
+      org.apache.hadoop.fs.FileUtil.copy(fs, s.getPath, fs,
+        new org.apache.hadoop.fs.Path(idxPath, s.getPath.getName),
+        false, spark.sparkContext.hadoopConfiguration)
+    }
+    assert(fs.exists(new org.apache.hadoop.fs.Path(s"$idx/centroids")))
+    assert(IndexGen.live(spark, idx).isEmpty)
+    val e = intercept[IllegalStateException](IndexGen.liveRequired(spark, idx))
+    assert(e.getMessage.contains(idx) && e.getMessage.contains("no committed generation"))
+    val meter = new graft.tools.Meter(spark.sparkContext)
+    try {
+      val w = meter.measure {
+        val err = intercept[IllegalStateException](AnnIndex.load(spark, idx))
+        assert(err.getMessage.contains(idx))
+      }
+      assert(w.jobs.isEmpty, s"load read the flat payload: ${w.jobs.map(_.site)}")
+    } finally meter.close()
   }
 
   test("ANN model loaded at gen N answers identically while a concurrent compact publishes N+1") {
