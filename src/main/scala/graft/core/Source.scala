@@ -37,6 +37,7 @@ object Source {
     * (`context.go:469-474`); global order is restorable by sorting on it
     * (SURVEY §3.4 divergence note). */
   def stamp(df: DataFrame): DataFrame = {
+    SmallSort.install(df.sparkSession)
     val withUniq =
       if (df.columns.contains("uniq")) df
       else if (df.isStreaming)
@@ -53,18 +54,25 @@ object Source {
   }
 }
 
-/** Bounded in-memory list source (ref `io.From`, `io/list.go:27-29`). */
+/** Bounded in-memory list source (ref `io.From`, `io/list.go:27-29`):
+  * element i becomes the row (`value` = `toValue(values(i))`, `uniq` = i).
+  *
+  * The rows are a `LocalRelation`, so the plan carries its size (rows ×
+  * row width) and Catalyst can tell a small list from a large input —
+  * [[SmallSort]] sorts a small one in one task. It scans as a
+  * `LocalTableScan` of `min(size, defaultParallelism)` slices, the
+  * split `parallelize` would give. The list lives in the plan, as it
+  * lives in the driver's memory already. */
 final case class ListSource[T](values: Seq[T], toValue: T => Any = identity[T] _,
                                valueType: DataType = StringType) extends Source {
   def read(spark: SparkSession): DataFrame = {
+    import scala.jdk.CollectionConverters._
     val rows = values.zipWithIndex.map { case (v, i) =>
       org.apache.spark.sql.Row(toValue(v), i.toLong)
     }
     val schema = StructType(Seq(
       StructField("value", valueType), StructField("uniq", LongType)))
-    Source.stamp(spark.createDataFrame(
-      spark.sparkContext.parallelize(rows,
-        math.min(values.size max 1, spark.sparkContext.defaultParallelism)), schema))
+    Source.stamp(spark.createDataFrame(rows.asJava, schema))
   }
 }
 

@@ -6,7 +6,7 @@ import scala.util.control.NonFatal
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelationWithTable}
 
 /** Loader for the driver-provided parquet tables (TESTDATA.md).
   *
@@ -15,7 +15,7 @@ import org.apache.spark.sql.types.StructType
   * pushdown, column pruning and partition pruning all reach the parquet
   * reader. At 100 TB the same code path works unchanged against a
   * partitioned table dir; nothing here materializes or caches rows
-  * driver-side (only a table's schema, see [[Tables.read]]).
+  * driver-side (only a table's resolved relation, see [[Tables.read]]).
   */
 final case class Tables(spark: SparkSession, dir: String) {
   private def t(name: String): DataFrame = Tables.read(spark, s"$dir/$name.parquet")
@@ -92,44 +92,57 @@ final case class Tables(spark: SparkSession, dir: String) {
 }
 
 object Tables {
-  /** What a cached schema was inferred under: the session's parquet read
-    * settings and the path's listing as (name, length, modification time). */
-  private final case class Inferred(conf: Seq[(String, String)],
+  /** What a resolved relation was resolved under: the session's parquet
+    * read settings and the path's listing as (name, length, modification
+    * time). The relation holds the session that resolved it. */
+  private final case class Resolved(conf: Seq[(String, String)],
                                     files: Seq[(String, Long, Long)],
-                                    schema: StructType)
+                                    relation: HadoopFsRelation)
 
   /** One entry per qualified path: a changed listing or setting replaces it. */
-  private val inferred = new ConcurrentHashMap[String, Inferred]()
+  private val resolved = new ConcurrentHashMap[String, Resolved]()
 
   /** The one parquet read path for fixture tables and table roots.
     *
-    * Spark infers a parquet schema with a distributed job (a footer
-    * read, `parallelize(...).collect()`) on every schema-less read, even
-    * of one file — a whole job per table read that computes nothing the
-    * query returns. So the first read of a path infers as usual, and a
-    * later read passes that schema back (`spark.read.schema(s)`), which
-    * skips inference and its job. The schema is reused only while the
-    * session's parquet read settings are the ones it was inferred under
-    * and one `listStatus` of the path returns the same files and no
-    * subdirectory; anything else (a rewritten file, a partitioned
-    * directory, a path that does not list) is read the plain way.
+    * A plain `spark.read.parquet` resolves its relation on every call:
+    * it infers the schema with a distributed job (a footer read,
+    * `parallelize(...).collect()`, even for one file), globs the path on
+    * a new thread pool and lists the files into a new file index — work
+    * that computes nothing the query returns. So the first read of a
+    * path resolves as usual and keeps the `HadoopFsRelation`; a later
+    * read by the same session wraps that relation in a new
+    * `LogicalRelation` (`baseRelationToDataFrame`), with fresh attribute
+    * ids, so a self-join of two reads resolves exactly as two plain
+    * reads do. A read by another session (the first one stopped, say)
+    * passes the kept schema back (`spark.read.schema(s)`), which skips
+    * only the inference, and keeps its own relation.
     *
-    * Only the schema is cached, never the DataFrame or its relation:
-    * one Dataset on both sides of a self-join would change attribute
-    * resolution. Plans and results are those of a plain read. */
+    * An entry is used only while the session's parquet read settings are
+    * the ones it was resolved under and one `listStatus` of the path
+    * returns the same files and no subdirectory; anything else (a
+    * rewritten file, a partitioned directory, a path that does not list)
+    * is read the plain way. Plans and results are those of a plain read.
+    *
+    * Every read also installs [[SmallSort]] on the session. */
   def read(spark: SparkSession, path: String): DataFrame = {
+    SmallSort.install(spark)
     val conf = readConf(spark)
     val listed = listing(spark, path)
     listed.flatMap { case (key, files) =>
-      Option(inferred.get(key)).filter(e => e.conf == conf && e.files == files)
+      Option(resolved.get(key)).filter(e => e.conf == conf && e.files == files)
     } match {
-      case Some(e) => spark.read.schema(e.schema).parquet(path)
-      case None =>
-        val df = spark.read.parquet(path)
-        listed.foreach { case (key, files) => inferred.put(key, Inferred(conf, files, df.schema)) }
+      case Some(e) if e.relation.sparkSession eq spark => spark.baseRelationToDataFrame(e.relation)
+      case hit =>
+        val df = hit.fold(spark.read.parquet(path))(e => spark.read.schema(e.relation.schema).parquet(path))
+        for ((key, files) <- listed; r <- relationOf(df)) resolved.put(key, Resolved(conf, files, r))
         df
     }
   }
+
+  private def relationOf(df: DataFrame): Option[HadoopFsRelation] =
+    df.queryExecution.analyzed.collectFirst {
+      case LogicalRelationWithTable(r: HadoopFsRelation, _) => r
+    }
 
   /** The session settings a parquet schema inference depends on. */
   private def readConf(spark: SparkSession): Seq[(String, String)] =

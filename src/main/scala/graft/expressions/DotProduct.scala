@@ -335,7 +335,8 @@ object GraftFunctions {
 
 /** `spark.sql.extensions`-compatible injector: native functions plus
   * the [[DotProductRewrite]] optimizer rule (HOF dot-product pattern →
-  * codegen'd [[DotProduct]]). */
+  * codegen'd [[DotProduct]]) and [[graft.core.SmallSort]] (a small
+  * global sort runs in one task). */
 class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Unit) {
   override def apply(ext: org.apache.spark.sql.SparkSessionExtensions): Unit = {
     GraftFunctions.functions.foreach { case (name, builder) =>
@@ -361,5 +362,6 @@ class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Un
         builder))
     }
     ext.injectOptimizerRule(_ => DotProductRewrite)
+    ext.injectOptimizerRule(_ => graft.core.SmallSort)
   }
 }

@@ -589,9 +589,13 @@ object CurationStream {
       val sizes = banded.filter(col("band") === 0).select("id", "n")
       val sizesAll = accBands.map(_.filter(col("band") === 0).select("id", "n"))
         .fold(sizes)(a => sizes.unionByName(a))
+      val sized = cand
+        .join(sizesAll.as("na"), col("id_a") === col("na.id"))
+        .join(sizesAll.as("nb"), col("id_b") === col("nb.id"))
+        .select(col("id_a"), col("id_b"), col("na.n").as("na"), col("nb.n").as("nb"))
       // Dedup.verifyJaccard = minhashLsh's own verify tail (one copy of
       // the intersection join + 4-decimal rounding)
-      val lshEdges = Dedup.verifyJaccard(cand, shCand, sizesAll, cfg.nearDupThreshold)
+      val lshEdges = Dedup.verifyJaccard(sized, shCand, cfg.nearDupThreshold)
         .select("id_a", "id_b")
       writeEpoch(withinExact.unionByName(crossExact).unionByName(lshEdges),
         s"$stateDir/edges", epochId)

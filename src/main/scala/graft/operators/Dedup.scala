@@ -551,7 +551,8 @@ object Dedup {
       .filter(col("jaccard") >= threshold)
   }
 
-  /** MinHash signature columns h0..h{perms-1}: h_i = min over shingles of
+  /** MinHash signature columns h0..h{perms-1} (after `id` and the set
+    * size `n`): h_i = min over shingles of
     * the 60-bit prefix of md5(i || '|' || shingleKey) — the permutation
     * input is the shingle's 60-bit KEY rendered as its decimal string
     * (r17: [[shingleSet]] hashes before the exchange), not the raw
@@ -562,7 +563,10 @@ object Dedup {
                         textCol: String = "text", idCol: String = "doc_id"): DataFrame =
     signaturesFrom(shingleSet(docs, textCol, idCol, n), perms)
 
-  /** Signatures from a (id, sh) long-form shingle set. The `perms`
+  /** Signatures from a (id, sh) long-form shingle set: (id, n,
+    * h0..h{perms-1}), where `n` is the doc's row count in `s` — its set
+    * size, counted in the same aggregation (the vocab join-back yields
+    * exactly one row per `s` row, `vocab` being distinct on `sh`). The `perms`
     * md5 hashes are computed once per DISTINCT shingle (the shingle
     * vocabulary is far smaller than the occurrence list — natural-text
     * trigrams repeat heavily), then joined back — at 100 TB this turns
@@ -583,7 +587,7 @@ object Dedup {
         Text.md5Prefix(concat(lit(s"$i|"), col("sh").cast("string")), 15)
           .as(s"x$i")): _*)
     val mins = (0 until perms).map(i => min(col(s"x$i")).as(s"h$i"))
-    s.join(vocab, "sh").groupBy("id").agg(mins.head, mins.tail: _*)
+    s.join(vocab, "sh").groupBy("id").agg(count(lit(1)).as("n"), mins: _*)
   }
 
   /** First-matching-band guard: TRUE iff any position of the two
@@ -642,12 +646,13 @@ object Dedup {
     // reuses the layout instead of re-shuffling unknown partitioning.
     // `before` = this row's EARLIER band signatures (a slice of the
     // same array, ≤ bands−1 entries), the payload behind the
-    // first-matching-band rule below.
+    // first-matching-band rule below; `n` (the set size) rides along
+    // to the verify.
     val banded = shared(
-      sig.select(col("id"), array(bandSigs: _*).as("sigs"))
-        .select(col("id"), col("sigs"),
+      sig.select(col("id"), col("n"), array(bandSigs: _*).as("sigs"))
+        .select(col("id"), col("n"), col("sigs"),
           posexplode(col("sigs")).as(Seq("band", "sig")))
-        .select(col("id"), col("band"), col("sig"),
+        .select(col("id"), col("n"), col("band"), col("sig"),
           slice(col("sigs"), lit(1), col("band")).as("before"))
         .repartition(col("band"), col("sig")), materialize)
     // exactly-once BY CONSTRUCTION: a pair is kept only where its
@@ -658,32 +663,28 @@ object Dedup {
         col("a.band") === col("b.band") && col("a.sig") === col("b.sig") &&
           col("a.id") < col("b.id") &&
           !bandMatch(col("a.before"), col("b.before")))
-      .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
+      .select(col("a.id").as("id_a"), col("b.id").as("id_b"),
+        col("a.n").as("na"), col("b.n").as("nb"))
     // verify candidates with exact jaccard (reusing the persisted set)
-    val sizes = s.groupBy("id").agg(count(lit(1)).as("n"))
-    verifyJaccard(cand, s, sizes, threshold)
+    verifyJaccard(cand, s, threshold)
   }
 
-  /** Exact-jaccard verification of a candidate pair set against a
-    * shingle long form `sh` (columns id, sh) with set sizes (id, n) —
-    * the [[minhashLsh]] verify tail, also the verify stage of the
-    * streaming curation lane ([[CurationStream]]). Batch==stream hash
-    * equality requires the IDENTICAL intersection join and 4-decimal
-    * rounding, so there is exactly one copy of it. Returns
-    * (id_a, id_b, jaccard) at or above `threshold`. */
+  /** Exact-jaccard verification of a candidate pair set (id_a, id_b,
+    * with the two set sizes na, nb) against a shingle long form `sh`
+    * (columns id, sh) — the [[minhashLsh]] verify tail, also the verify
+    * stage of the streaming curation lane ([[CurationStream]]).
+    * Batch==stream hash equality requires the IDENTICAL intersection
+    * join and 4-decimal rounding, so there is exactly one copy of it.
+    * Returns (id_a, id_b, jaccard) at or above `threshold`. */
   private[operators] def verifyJaccard(cand: DataFrame, sh: DataFrame,
-                                       sizes: DataFrame, threshold: Double): DataFrame = {
-    val inter = cand
+                                       threshold: Double): DataFrame =
+    cand
       .join(sh.as("sa"), col("id_a") === col("sa.id"))
       .join(sh.as("sb"), col("id_b") === col("sb.id") && col("sa.sh") === col("sb.sh"))
-      .groupBy("id_a", "id_b").agg(count(lit(1)).as("i"))
-    inter
-      .join(sizes.as("na"), col("id_a") === col("na.id"))
-      .join(sizes.as("nb"), col("id_b") === col("nb.id"))
+      .groupBy("id_a", "id_b", "na", "nb").agg(count(lit(1)).as("i"))
       .select(col("id_a"), col("id_b"),
-        round(col("i") / (col("na.n") + col("nb.n") - col("i")), 4).as("jaccard"))
+        round(col("i") / (col("na") + col("nb") - col("i")), 4).as("jaccard"))
       .filter(col("jaccard") >= threshold)
-  }
 
   /** Connected components over a near-dup pair set (hash-min label
     * propagation): every doc in a transitively-connected cluster gets

@@ -6,7 +6,6 @@ import graft.queries.LlmOps
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 
-import scala.jdk.CollectionConverters._
 
 /** The streaming curation twin's contract: the SAME corpus through
   * id-hashed micro-batches — gates, dedup-edge generation and media
@@ -199,16 +198,15 @@ class CurationStreamSpec extends SparkSpec {
 
     val tables = Seq("gated", "edges", "bands", "img_sigs", "img_losers",
       "aud_sigs", "aud_losers")
-    // listed on the local side of faulty:// (the same files)
+    // listed through faulty:// itself
     def epochFiles(): Set[(String, Long, Long)] = tables.flatMap { t =>
-      val p = root.resolve(s"state/$t/__epoch=1")
-      if (!java.nio.file.Files.exists(p)) Nil
+      val p = new org.apache.hadoop.fs.Path(s"$state/$t/__epoch=1")
+      val fs = p.getFileSystem(hc)
+      if (!fs.exists(p)) Nil
       else {
-        val walk = java.nio.file.Files.walk(p)
-        try walk.iterator().asScala.filter(java.nio.file.Files.isRegularFile(_))
-          .map(f => (f.toString, java.nio.file.Files.size(f),
-            java.nio.file.Files.getLastModifiedTime(f).toMillis)).toList
-        finally walk.close()
+        val it = fs.listFiles(p, true)
+        Iterator.continually(it).takeWhile(_.hasNext).map(_.next())
+          .map(f => (f.getPath.toString, f.getLen, f.getModificationTime)).toList
       }
     }.toSet
     val atFailure = epochFiles()

@@ -2,7 +2,7 @@ package graft
 
 import java.net.URI
 
-import org.apache.hadoop.fs.{Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.{FileStatus, Path, RawLocalFileSystem}
 import org.apache.hadoop.fs.permission.FsPermission
 import org.apache.hadoop.util.Progressable
 
@@ -77,6 +77,26 @@ object FaultInjector {
 class FaultyFileSystem extends RawLocalFileSystem {
   override def getScheme: String = "faulty"
   override def getUri: URI = URI.create("faulty:///")
+
+  /** The local filesystem this one wraps, for permission lookups. */
+  private lazy val local = {
+    val fs = new RawLocalFileSystem
+    fs.initialize(URI.create("file:///"), getConf)
+    fs
+  }
+
+  // RawLocalFileSystem's statuses load their permissions lazily from a
+  // java.io.File built from the status's own URI, which throws for a
+  // faulty:// one (`URI scheme is not "file"`) — e.g. when listFiles
+  // wraps each status in a LocatedFileStatus. Statuses handed out here
+  // carry the permissions of the wrapped local path instead.
+  override def listStatus(f: Path): Array[FileStatus] =
+    super.listStatus(f).map { st =>
+      val perm = local.getFileStatus(new Path(st.getPath.toUri.getPath))
+      new FileStatus(st.getLen, st.isDirectory, st.getReplication, st.getBlockSize,
+        st.getModificationTime, st.getAccessTime, perm.getPermission, perm.getOwner,
+        perm.getGroup, st.getPath)
+    }
 
   override def create(f: Path, permission: FsPermission, overwrite: Boolean,
                       bufferSize: Int, replication: Short, blockSize: Long,

@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.sql.functions.col
+
 /** Plan-quality gate: the corpus must produce the plans a 100 TB run
   * needs — filters and projections pushed into the parquet scan,
   * dimension joins broadcast, top-k as TakeOrdered, and no accidental
@@ -12,6 +14,77 @@ class PlanSpec extends SparkSpec {
     val df = SparkEntry.queries(name)(spark, dir)
     df.queryExecution.explainString(
       org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
+  }
+
+  /** The AQE-final executed plan of `df`, after running it. */
+  private def finalPlan(df: org.apache.spark.sql.DataFrame) = {
+    df.collect()
+    df.queryExecution.executedPlan
+  }
+
+  private object Aqe extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+
+  test("q2_filter_project: a small global sort runs over a coalesce to one partition, no exchange") {
+    import org.apache.spark.sql.execution.{CoalesceExec, SortExec}
+    import org.apache.spark.sql.execution.exchange.Exchange
+    val p = finalPlan(SparkEntry.queries("q2_filter_project")(spark, dir))
+    assert(Aqe.collect(p) { case e: Exchange => e }.isEmpty, p.toString)
+    val sorts = Aqe.collect(p) { case s: SortExec => s }
+    assert(sorts.size == 1 && sorts.head.global, p.toString)
+    assert(Aqe.collect(sorts.head) { case c: CoalesceExec if c.numPartitions == 1 => c }.size == 1,
+      p.toString)
+  }
+
+  test("a sort whose input estimate is above the broadcast threshold keeps its range exchange") {
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val prev = spark.conf.get(key)
+    try {
+      spark.conf.set(key, "1024")
+      val df = SparkEntry.queries("q2_filter_project")(spark, dir)
+      val sort = df.queryExecution.optimizedPlan.collectFirst {
+        case s: org.apache.spark.sql.catalyst.plans.logical.Sort => s
+      }.get
+      assert(sort.child.stats.sizeInBytes > 1024)
+      val p = finalPlan(df).toString
+      assert(p.contains("rangepartitioning") && !p.contains("Coalesce 1"), p)
+    } finally spark.conf.set(key, prev)
+  }
+
+  test("orderBy(...).limit(n) keeps TakeOrderedAndProject, with or without a projection between") {
+    import org.apache.spark.sql.execution.TakeOrderedAndProjectExec
+    val q2 = SparkEntry.queries("q2_filter_project")(spark, dir)
+    Seq(q2.limit(10), q2.select(col("revenue")).limit(10)).foreach { df =>
+      val p = finalPlan(df)
+      assert(Aqe.collect(p) { case t: TakeOrderedAndProjectExec => t }.size == 1, p.toString)
+      assert(!p.toString.contains("Coalesce 1"), p.toString)
+    }
+  }
+
+  test("a streaming plan is left as it is by the small-sort rule") {
+    import org.apache.spark.sql.catalyst.plans.logical.Repartition
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    import spark.implicits._
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    val mem = MemoryStream[Int]
+    val counts = (df: org.apache.spark.sql.DataFrame) =>
+      df.groupBy("value").count().orderBy(col("value").desc)
+    val streaming = counts(mem.toDF()).queryExecution.analyzed
+    assert(streaming.isStreaming && (core.SmallSort(streaming) eq streaming))
+    // the batch twin of the same plan is rewritten
+    val batch = counts(spark.range(5).toDF("value")).queryExecution.analyzed
+    assert(core.SmallSort(batch).collect { case r: Repartition => r }.size == 1)
+    // and a running query's micro-batch plans carry no repartition
+    mem.addData(3, 1, 3, 2)
+    val q = counts(mem.toDF()).writeStream.format("memory").queryName("small_sort_stream")
+      .outputMode("complete").start()
+    try {
+      q.processAllAvailable()
+      val last = q.asInstanceOf[org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper]
+        .streamingQuery.lastExecution
+      assert(last.optimizedPlan.collect { case r: Repartition => r }.isEmpty, last.optimizedPlan)
+      assert(spark.table("small_sort_stream").collect().map(r => (r.getInt(0), r.getLong(1))).toSeq ==
+        Seq(3 -> 2L, 2 -> 1L, 1 -> 1L))
+    } finally q.stop()
   }
 
   test("q2 filter and projection reach the parquet scan") {

@@ -55,6 +55,45 @@ class TablesSpec extends SparkSpec {
     assert(rows(df) == Seq("[0,0]", "[1,1]", "[2,2]"))
   }
 
+  test("a self-join of two reads of one table equals the plain-read self-join") {
+    val path = s"$dir/nation.parquet"
+    def selfJoin(a: DataFrame, b: DataFrame) =
+      a.join(b, a("n_regionkey") === b("n_regionkey") && a("n_nationkey") < b("n_nationkey"))
+        .select(a("n_nationkey"), b("n_nationkey"))
+    Tables.read(spark, path)
+    val (jobs, a) = jobsToBuild(Tables.read(spark, path))
+    val b = Tables.read(spark, path)
+    assert(jobs == 0)
+    assert(a.queryExecution.analyzed.output.map(_.exprId).intersect(
+      b.queryExecution.analyzed.output.map(_.exprId)).isEmpty, "reads must not share attributes")
+    val plain = selfJoin(spark.read.parquet(path), spark.read.parquet(path))
+    assert(rows(selfJoin(a, b)) == rows(plain) && rows(plain).nonEmpty)
+  }
+
+  test("a file rewritten with the same schema is read fresh") {
+    val path = s"${scratch()}/same.parquet"
+    spark.range(5).toDF("a").write.parquet(path)
+    assert(rows(Tables.read(spark, path)) == (0 until 5).map(i => s"[$i]"))
+    assert(rows(Tables.read(spark, path)) == (0 until 5).map(i => s"[$i]"))
+    spark.range(10, 13).toDF("a").write.mode("overwrite").parquet(path)
+    assert(rows(Tables.read(spark, path)) == Seq("[10]", "[11]", "[12]"))
+  }
+
+  test("after stop(), a new session reads correctly and does not reuse the old relation") {
+    // a session cannot be stopped inside the shared test JVM: run
+    // TablesRestartMain in its own JVM on this one's class path
+    import scala.jdk.CollectionConverters._
+    val jvmArgs = java.lang.management.ManagementFactory.getRuntimeMXBean.getInputArguments
+      .asScala.filterNot(a => a.startsWith("-Xm") || a.startsWith("-agent") || a.startsWith("-javaagent"))
+    val cmd = Seq(s"${System.getProperty("java.home")}/bin/java", "-Xmx1g") ++ jvmArgs ++
+      Seq("-cp", System.getProperty("java.class.path"), "graft.TablesRestartMain", s"$dir/nation.parquet")
+    val proc = new ProcessBuilder(cmd: _*).redirectError(ProcessBuilder.Redirect.DISCARD).start()
+    val out = scala.io.Source.fromInputStream(proc.getInputStream).getLines().toList
+    assert(proc.waitFor() == 0, out.mkString("\n"))
+    val n = spark.read.parquet(s"$dir/nation.parquet").count()
+    assert(out.contains(s"RESULT $n $n own-session reused"), out.mkString("\n"))
+  }
+
   test("changing spark.sql.parquet.binaryAsString infers again") {
     // a file without Spark's schema in its footer: a bare BINARY column,
     // as other writers produce it; Spark's own files would pin the type
@@ -99,5 +138,37 @@ class TablesSpec extends SparkSpec {
       assert(df.schema("ts").dataType == TimestampType, df.schema)
     }
     assert(rows(warm) == rows(first))
+  }
+}
+
+/** Reads a table in one `local[1]` session, stops it, starts another and
+  * reads the table again; prints `RESULT <rows> <rows> <relation check>`.
+  * Run by TablesSpec in its own JVM. */
+object TablesRestartMain {
+  import org.apache.spark.sql.SparkSession
+  import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelationWithTable}
+
+  private def session(): SparkSession = SparkSession.builder().master("local[1]")
+    .config("spark.ui.enabled", "false").config("spark.sql.shuffle.partitions", "1")
+    .getOrCreate()
+
+  private def relation(df: DataFrame): HadoopFsRelation =
+    df.queryExecution.analyzed.collectFirst {
+      case LogicalRelationWithTable(r: HadoopFsRelation, _) => r
+    }.get
+
+  def main(args: Array[String]): Unit = {
+    val path = args(0)
+    val first = session()
+    Tables.read(first, path)
+    val n1 = Tables.read(first, path).count()
+    first.stop()
+    val second = session()
+    val df = Tables.read(second, path)
+    val own = if (relation(df).sparkSession eq second) "own-session" else "stale-session"
+    val n2 = df.count()
+    val reused = if (relation(Tables.read(second, path)) eq relation(df)) "reused" else "not-reused"
+    println(s"RESULT $n1 $n2 $own $reused")
+    second.stop()
   }
 }
